@@ -41,6 +41,8 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from windflow_spark.util import release_cache  # noqa: E402
+
 # Fixed drift-sentinel set: cheap, stable, spanning the engine's main paths
 # (decimal agg, pushdown filter, map-side enrich, sliding window, keyed
 # dedup groupBy). Never remove or reorder — cross-round comparability is
@@ -85,6 +87,8 @@ def build_payload(
 
 
 def _run_once(fn, spark, sf_dir) -> float:
+    # a timed invocation must never read data cached by an earlier one
+    release_cache(spark)
     t0 = time.time()
     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
     return time.time() - t0

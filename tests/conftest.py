@@ -21,3 +21,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture
+def no_cached_lineage(spark):
+    """Plan text depends on the session's cache: a frame persisted by an
+    earlier test renders as a cached-lineage scan. Plan-test modules start
+    every test from an empty cache via ``pytestmark``."""
+    spark.catalog.clearCache()

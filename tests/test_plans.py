@@ -4,6 +4,7 @@ melt at 100 TB (full scans, lost broadcasts, extra shuffles)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from windflow_spark.plans import (
@@ -22,6 +23,8 @@ from windflow_spark.queries import (
     q6_revenue_filter,
     win_tb_sliding_1h_15m,
 )
+
+pytestmark = pytest.mark.usefixtures("no_cached_lineage")
 
 
 def test_q6_filters_pushed_to_scan(spark, sf_dir):
@@ -354,13 +357,16 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path_factory):
         j = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
         # disable broadcast so the join must be sort-merge — the point is
         # that co-bucketing removes BOTH exchanges
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             j2 = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
             assert shuffle_count(j2) == 0
             assert j2.count() == li.count()
         finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            # restore the session's threshold: unset() falls back to Spark's
+            # 10 MB default and changes every later plan's broadcasts
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")

@@ -7,9 +7,12 @@ unchanged.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from windflow_spark.plans.explain import physical_plan
+
+pytestmark = pytest.mark.usefixtures("no_cached_lineage")
 
 
 def test_assoc_rules_lift_no_window_no_eager_count(spark, sf_dir):

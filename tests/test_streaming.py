@@ -5,6 +5,7 @@ forms on identical data (batch≡streaming metamorphic invariant, SURVEY.md
 from __future__ import annotations
 
 import datetime as dt
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -281,16 +282,7 @@ def test_streaming_kslack_equals_batch_replay(spark, tmp_path_factory):
     assert got == expect and len(expect) > 50  # most tuples released
 
 
-def test_streaming_kslack_multichunk_group(spark, tmp_path_factory):
-    """A group larger than arrow.maxRecordsPerBatch reaches the state
-    function as MULTIPLE pandas chunks with no cross-chunk order guarantee;
-    the replay must sort the CONCATENATED micro-batch by arrival, not each
-    chunk independently. Forced here by shrinking maxRecordsPerBatch to 8
-    and scrambling one key's 60-row batch so chunk-local order != global
-    arrival order."""
-    import random
-    import time as _time
-
+def _mc_kslack(spark):
     from windflow_spark.operators.kslack import kslack_reorder
     from windflow_spark.streaming import streaming_kslack
 
@@ -307,34 +299,120 @@ def test_streaming_kslack_multichunk_group(spark, tmp_path_factory):
     # matching the batch form's EOS flush (see streaming_kslack docstring)
     punct = [(0, SENT, 1_000, -1), (0, 2 * SENT, 1_001, -1)]
     schema = "key long, ts_us long, arrival long, value long"
+    cols = ["key", "ts_us", "arrival", "value", "emit_seq"]
     full = spark.createDataFrame(rows + punct, schema)
-    expect = sorted(
-        (r.key, r.ts_us, r.arrival, r.value, r.emit_seq)
-        for r in kslack_reorder(full, ["key"], "ts_us", "arrival").collect()
-        if r.ts_us < SENT
+    expect = [
+        r for r in map(tuple, kslack_reorder(full, ["key"], "ts_us", "arrival")
+                       .select(*cols).collect())
+        if r[1] < SENT
+    ]
+
+    def run(stream):
+        out = streaming_kslack(stream, ["key"], "ts_us", "arrival", ["value"])
+        return out.filter(F.col("ts_us") < SENT).select(*cols)
+
+    return rows, punct, schema, expect, run
+
+
+def _mc_rows(eos: bool):
+    """One key, 60 rows with distinct timestamps; with ``eos`` the rows carry
+    a false eos flag and the tail is the key's EOS punctuation."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(0, i * 7 % 11, t0 + dt.timedelta(seconds=i)) for i in range(60)]
+    if not eos:
+        return rows, [], "key long, value long, ts timestamp"
+    tail = [(0, None, rows[-1][2], True)]
+    return [r + (False,) for r in rows], tail, "key long, value long, ts timestamp, eos boolean"
+
+
+def _mc_rolling_reduce(spark):
+    rows, tail, schema = _mc_rows(eos=False)
+    folds = {"running_cnt": F.count(F.lit(1)), "running_sum": F.sum("value")}
+    cols = ["key", "ts", "running_cnt", "running_sum"]
+    expect = rolling_reduce(spark.createDataFrame(rows, schema), ["key"], ["ts"], folds)
+    return rows, tail, schema, expect.select(*cols).collect(), (
+        lambda stream: streaming_rolling_reduce(stream, ["key"], "ts", "value").select(*cols)
     )
 
+
+def _mc_cb(spark, slide):
+    from windflow_spark.operators.windows import sliding_window_cb
+    from windflow_spark.streaming import streaming_sliding_window_cb
+
+    rows, tail, schema = _mc_rows(eos=True)
+    aggs = [F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value")]
+    batch = spark.createDataFrame(rows, schema)
+    cols = ["key", "wid", "cnt", "sum_value"]
+    if slide is None:
+        expect = tumbling_window_cb(batch, ["key"], ["ts"], 7, aggs)
+        run = lambda s: streaming_tumbling_window_cb(s, ["key"], "ts", "value", 7, eos_col="eos")
+    else:
+        expect = sliding_window_cb(batch, ["key"], ["ts"], 6, slide, aggs)
+        run = lambda s: streaming_sliding_window_cb(
+            s, ["key"], "ts", "value", 6, slide, eos_col="eos"
+        )
+    return rows, tail, schema, expect.select(*cols).collect(), lambda s: run(s).select(*cols)
+
+
+def _mc_p_map(spark):
+    from pyspark.sql import Window as W
+
+    from windflow_spark.streaming import p_map
+
+    rows, tail, schema = _mc_rows(eos=False)
+    lag = F.lag("value", 1, 0).over(W.partitionBy("key").orderBy("ts"))
+    expect = spark.createDataFrame(rows, schema).select(
+        "key", "ts", (F.col("value") - lag).alias("delta")
+    )
+
+    def delta(row, st):
+        out = {"key": row["key"], "ts": row["ts"], "delta": row["value"] - st[0]}
+        st[0] = row["value"]
+        return out
+
+    return rows, tail, schema, expect.collect(), lambda stream: p_map(
+        stream, ["key"], "ts", delta, "key long, ts timestamp, delta long", "last long", (0,)
+    )
+
+
+_MULTICHUNK = {
+    "kslack": _mc_kslack,
+    "rolling_reduce": _mc_rolling_reduce,
+    "tumbling_cb_eos": lambda spark: _mc_cb(spark, None),
+    "sliding_cb_eos": lambda spark: _mc_cb(spark, 2),
+    "p_map": _mc_p_map,
+}
+
+
+@pytest.mark.parametrize("case", list(_MULTICHUNK))
+def test_streaming_multichunk_group(spark, tmp_path_factory, case):
+    """A group larger than arrow.maxRecordsPerBatch reaches the state
+    function as MULTIPLE pandas chunks with no cross-chunk order guarantee;
+    the fold must order the CONCATENATED micro-batch, not each chunk
+    independently. Forced here by shrinking maxRecordsPerBatch to 8 and
+    scrambling one key's 60-row batch so chunk-local order != global order;
+    a tail file (punctuations), when present, lands in a later micro-batch.
+    Output must equal the batch sibling's."""
+    import time as _time
+
+    rows, tail, schema, expect, run = _MULTICHUNK[case](spark)
     scrambled = list(rows)
-    rng.shuffle(scrambled)  # chunk-local arrival order != global order
-    path = str(tmp_path_factory.mktemp("kslack_chunk_src"))
+    random.Random(42).shuffle(scrambled)  # chunk-local order != global order
+    path = str(tmp_path_factory.mktemp(f"multichunk_{case}"))
     spark.createDataFrame(scrambled, schema).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)
-    spark.createDataFrame(punct, schema).coalesce(1).write.mode("append").parquet(path)
+    if tail:
+        _time.sleep(1.1)
+        spark.createDataFrame(tail, schema).coalesce(1).write.mode("append").parquet(path)
 
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
     try:
-        stream = file_stream(spark, path, full.schema, max_files_per_trigger=1)
-        out = streaming_kslack(stream, ["key"], "ts_us", "arrival", ["value"])
-        name, _ = to_memory_sink(out, output_mode="append")
-        got = sorted(
-            (r.key, r.ts_us, r.arrival, r.value, r.emit_seq)
-            for r in spark.table(name).collect()
-            if r.ts_us < SENT
-        )
+        stream = file_stream(spark, path, schema, max_files_per_trigger=1)
+        name, _ = to_memory_sink(run(stream), output_mode="append")
+        got = sorted(map(tuple, spark.table(name).collect()))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    assert got == expect and len(expect) > 30
+    assert got == sorted(map(tuple, expect)) and len(expect) > 8
 
 
 def test_streaming_exact_dedup_equals_batch(spark, stream_fixture):

@@ -55,6 +55,7 @@ def main() -> None:
     from windflow_spark import get_spark
     from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Qnew
+    from windflow_spark.util import release_cache
 
     Qold = load_ref_queries(args.ref)
 
@@ -77,6 +78,7 @@ def main() -> None:
     ).write.mode("overwrite").format("noop").save()
 
     def run(fn) -> float:
+        release_cache(spark)
         t0 = time.time()
         fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
         return time.time() - t0

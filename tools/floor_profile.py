@@ -54,6 +54,7 @@ def main() -> None:
     from windflow_spark import get_spark
     from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Q
+    from windflow_spark.util import release_cache
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("floor-profile", extra_conf=extra or None)
@@ -103,6 +104,7 @@ def main() -> None:
         best = None
         for r in range(args.repeats):
             group = f"{name}#{r}"
+            release_cache(spark)
             t0 = time.time()
             df = fn(spark, args.sf_dir)
             t1 = time.time()

@@ -46,6 +46,7 @@ def main() -> None:
     from windflow_spark import get_spark
     from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Q
+    from windflow_spark.util import release_cache
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("qprof", extra_conf=extra or None)
@@ -81,6 +82,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"qprof:{name}")
         runs = []
         for _ in range(args.repeats):
+            release_cache(spark)
             t0 = time.time()
             fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             runs.append(time.time() - t0)

@@ -66,7 +66,15 @@ def keyed_shuffle_count(df: DataFrame) -> int:
     real scale) are excluded, so plan tests can pin 'no keyed shuffle'
     without breaking on the toy-input parallelism floor."""
     plan = physical_plan(df)
-    return len(re.findall(r"(?:hash|range)partitioning\(", plan))
+    # one detail block per node, "(N) Exchange" up to the next "(M) ..."
+    # header: count the distinct nodes whose Arguments are keyed — a cached
+    # lineage can repeat partitioning text, never a node's detail header
+    keyed = {
+        m.group(1)
+        for m in re.finditer(r"^\((\d+)\) Exchange\b(.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+        if re.search(r"^Arguments: (?:hash|range)partitioning\(", m.group(2), re.M)
+    }
+    return len(keyed)
 
 
 def codegen_stage_count(df: DataFrame) -> int:

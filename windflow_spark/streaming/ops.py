@@ -10,12 +10,15 @@ withLateness(µs) (reference wf/builders.hpp:743-781).
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import bisect
+from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from windflow_spark.streaming.keyed import keyed_fold
 
 
 def _round_half_up(x: float, nd: int = 6) -> float:
@@ -352,7 +355,7 @@ def streaming_rolling_reduce(
 ) -> DataFrame:
     """Reduce operator, streaming form: per-key running (count, sum) state
     emitting ONE ROW PER INPUT (the reference's per-input state emission,
-    wf/reduce.hpp:~135-142) via applyInPandasWithState.
+    wf/reduce.hpp:~135-142) via the keyed-state driver (streaming/keyed.py).
 
     Rows within a micro-batch are processed in event-time order per key;
     cross-batch order follows trigger arrival — the same per-key-only
@@ -365,26 +368,20 @@ def streaming_rolling_reduce(
     )
     state_schema = "cnt long, s double"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def step(key, st, rows, eos):
+        cnt, s = st
+        vals = rows[value_col].to_numpy(dtype=np.float64)
+        res = rows[key_list + [ts_col, value_col]].copy()
+        # vectorized running state: cumsum over the batch + carry-in
+        res["running_cnt"] = cnt + np.arange(1, len(vals) + 1)
+        run = s + np.cumsum(vals)
+        res["running_sum"] = run
+        if len(vals):
+            cnt, s = cnt + len(vals), float(run[-1])
+        return res, (cnt, s)
 
-        (cnt, s) = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            res = pdf[key_list + [ts_col, value_col]].copy()
-            # vectorized running state: cumsum over the batch + carry-in
-            res["running_cnt"] = cnt + np.arange(1, len(vals) + 1)
-            run = s + np.cumsum(vals)
-            res["running_sum"] = run
-            if len(vals):
-                cnt += len(vals)
-                s = float(run[-1])
-            yield res
-        state.update((cnt, s))
-
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, key_list, step, output_schema, state_schema, (0, 0.0), order=[ts_col]
     )
 
 
@@ -402,12 +399,12 @@ def streaming_tumbling_window_cb(
     ``length``.
 
     EOS flush (reference wf/window_replica.hpp:356-400 fires all open
-    windows at end of stream): applyInPandasWithState has no teardown
+    windows at end of stream): Spark's grouped-state API has no teardown
     callback, so EOS arrives the way the reference itself propagates it —
     as an IN-BAND punctuation (Single_t's punctuation flag → eosnotify).
     Pass ``eos_col`` naming a boolean column; a true row is a punctuation
     (its value is ignored) that flushes the key's trailing partial window
-    and resets its state. Punctuations order after data rows regardless of
+    and clears its state. Punctuations order after data rows regardless of
     timestamp. ``cb_eos_punctuations`` builds the sentinel frame for
     bounded (availableNow) sources. Without ``eos_col``, trailing partials
     stay in state until query stop.
@@ -420,57 +417,40 @@ def streaming_tumbling_window_cb(
     )
     state_schema = "next_id long, wid long, wcnt long, wsum double"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        next_id, wid, wcnt, wsum = state.get if state.exists else (0, 0, 0, 0.0)
+    def step(key, st, rows, eos):
+        next_id, wid, wcnt, wsum = st
+        vals = rows[value_col].to_numpy(dtype=np.float64)
         fired: list[tuple] = []
-        for pdf in pdfs:
-            if eos_col is not None:
-                # punctuations sort AFTER all data rows of the batch
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                vals = pdf[value_col].to_numpy(dtype=np.float64)[~flags]
+        n = len(vals)
+        if n:
+            # Per-key ids are CONSECUTIVE from next_id, so each window's
+            # rows form one contiguous span: segment-sum via reduceat —
+            # no per-row Python. The carry-in partial always merges into
+            # the first span (state invariant: wid == next_id // length).
+            wids = (next_id + np.arange(n)) // length
+            starts = np.nonzero(np.r_[True, wids[1:] != wids[:-1]])[0]
+            sums = np.add.reduceat(vals, starts)
+            counts = np.diff(np.r_[starts, n])
+            uw = wids[starts]
+            if wcnt > 0:
+                sums[0] += wsum
+                counts[0] += wcnt
+            full = counts == length
+            for w, c, s_ in zip(uw[full], counts[full], sums[full]):
+                fired.append(key + (int(w), int(c), float(s_)))
+            if full[-1]:
+                wcnt, wsum = 0, 0.0
             else:
-                pdf = pdf.sort_values(ts_col)
-                eos_seen = False
-                vals = pdf[value_col].to_numpy(dtype=np.float64)
-            n = len(vals)
-            if n:
-                # Per-key ids are CONSECUTIVE from next_id, so each window's
-                # rows form one contiguous span: segment-sum via reduceat —
-                # no per-row Python. The carry-in partial always merges into
-                # the first span (state invariant: wid == next_id // length).
-                wids = (next_id + np.arange(n)) // length
-                starts = np.nonzero(np.r_[True, wids[1:] != wids[:-1]])[0]
-                sums = np.add.reduceat(vals, starts)
-                counts = np.diff(np.r_[starts, n])
-                uw = wids[starts]
-                if wcnt > 0:
-                    sums[0] += wsum
-                    counts[0] += wcnt
-                full = counts == length
-                for w, c, s_ in zip(uw[full], counts[full], sums[full]):
-                    fired.append(key + (int(w), int(c), float(s_)))
-                if full[-1]:
-                    wcnt, wsum = 0, 0.0
-                else:
-                    wcnt, wsum = int(counts[-1]), float(sums[-1])
-                next_id += n
-                wid = next_id // length
-            if eos_seen:
-                if wcnt > 0:  # flush the open partial window at EOS
-                    fired.append(key + (wid, wcnt, wsum))
-                next_id, wid, wcnt, wsum = 0, 0, 0, 0.0
-        state.update((next_id, wid, wcnt, wsum))
-        cols = key_list + ["wid", "cnt", "sum_value"]
-        yield pd.DataFrame(fired, columns=cols) if fired else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+                wcnt, wsum = int(counts[-1]), float(sums[-1])
+            next_id += n
+            wid = next_id // length
+        if eos and wcnt > 0:  # flush the open partial window at EOS
+            fired.append(key + (wid, wcnt, wsum))
+        return fired, (next_id, wid, wcnt, wsum)
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, key_list, step, output_schema, state_schema, (0, 0, 0, 0.0),
+        order=[ts_col], eos_col=eos_col,
     )
 
 
@@ -497,82 +477,54 @@ def streaming_sliding_window_cb(
 
     Output: (key..., wid, cnt, sum_value) per FIRED window.
     """
-    import numpy as np
-
     key_list = list(key_cols)
     output_schema = (
         ", ".join(f"{k} long" for k in key_list) + ", wid long, cnt long, sum_value double"
     )
     state_schema = "next_id long, wids array<long>, cnts array<long>, sums array<double>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            next_id, wids, cnts, sums = state.get
-            open_w = {int(w): (int(c), float(s)) for w, c, s in zip(wids, cnts, sums)}
-        else:
-            next_id, open_w = 0, {}
+    def step(key, st, rows, eos):
+        next_id, wids, cnts, sums = st
+        open_w = {int(w): (int(c), float(s)) for w, c, s in zip(wids, cnts, sums)}
         fired: list[tuple] = []
-
-        def flush_all() -> None:
-            nonlocal next_id, open_w
-            for w in sorted(open_w):
-                c, s = open_w[w]
-                if c > 0:
-                    fired.append(key + (w, c, s))
-            next_id, open_w = 0, {}
-
-        for pdf in pdfs:
-            if eos_col is not None:
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                vals = pdf[value_col].to_numpy(dtype=np.float64)[~flags]
-            else:
-                pdf = pdf.sort_values(ts_col)
-                eos_seen = False
-                vals = pdf[value_col].to_numpy(dtype=np.float64)
-            n = len(vals)
-            if n:
-                end = next_id + n
-                pre = np.concatenate([[0.0], np.cumsum(vals)])
-                # windows still open (w*slide + length > next_id) or newly
-                # started in this batch (w*slide <= end-1), w >= 0
-                w_lo = max(0, -(-(next_id - length + 1) // slide))
-                w_hi = (end - 1) // slide
-                ws = np.arange(w_lo, w_hi + 1)
-                a = ws * slide
-                b = a + length
-                lo = np.clip(a - next_id, 0, n).astype(np.int64)
-                hi = np.clip(b - next_id, 0, n).astype(np.int64)
-                part_c = (hi - lo).astype(np.int64)
-                part_s = pre[hi] - pre[lo]
-                for w, bb, pc, ps in zip(ws, b, part_c, part_s):
-                    c0, s0 = open_w.pop(int(w), (0, 0.0))
-                    c, s = c0 + int(pc), s0 + float(ps)
-                    if bb <= end:  # last id of the window arrived → fire
-                        if c > 0:
-                            fired.append(key + (int(w), c, s))
-                    elif c > 0:
-                        open_w[int(w)] = (c, s)
-                next_id = end
-            if eos_seen:
-                flush_all()
+        vals = rows[value_col].to_numpy(dtype=np.float64)
+        n = len(vals)
+        if n:
+            end = next_id + n
+            pre = np.concatenate([[0.0], np.cumsum(vals)])
+            # windows still open (w*slide + length > next_id) or newly
+            # started in this batch (w*slide <= end-1), w >= 0
+            w_lo = max(0, -(-(next_id - length + 1) // slide))
+            w_hi = (end - 1) // slide
+            ws = np.arange(w_lo, w_hi + 1)
+            a = ws * slide
+            b = a + length
+            lo = np.clip(a - next_id, 0, n).astype(np.int64)
+            hi = np.clip(b - next_id, 0, n).astype(np.int64)
+            part_c = (hi - lo).astype(np.int64)
+            part_s = pre[hi] - pre[lo]
+            for w, bb, pc, ps in zip(ws, b, part_c, part_s):
+                c0, s0 = open_w.pop(int(w), (0, 0.0))
+                c, s = c0 + int(pc), s0 + float(ps)
+                if bb <= end:  # last id of the window arrived → fire
+                    if c > 0:
+                        fired.append(key + (int(w), c, s))
+                elif c > 0:
+                    open_w[int(w)] = (c, s)
+            next_id = end
         keys_sorted = sorted(open_w)
-        state.update(
-            (
-                next_id,
-                [int(w) for w in keys_sorted],
-                [open_w[w][0] for w in keys_sorted],
-                [open_w[w][1] for w in keys_sorted],
-            )
-        )
-        cols = key_list + ["wid", "cnt", "sum_value"]
-        yield pd.DataFrame(fired, columns=cols) if fired else pd.DataFrame(
-            {c: [] for c in cols}
+        if eos:  # flush every open partial in wid order
+            fired.extend(key + (w,) + open_w[w] for w in keys_sorted)
+        return fired, (
+            next_id,
+            keys_sorted,
+            [open_w[w][0] for w in keys_sorted],
+            [open_w[w][1] for w in keys_sorted],
         )
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, key_list, step, output_schema, state_schema, (0, [], [], []),
+        order=[ts_col], eos_col=eos_col,
     )
 
 
@@ -695,7 +647,7 @@ def streaming_kslack(
 
     The batch sibling (operators/kslack.kslack_reorder) replays a finite
     arrival sequence; this form runs the SAME algorithm incrementally via
-    applyInPandasWithState — tcurr, K, the emitted horizon, the
+    the keyed-state driver — tcurr, K, the emitted horizon, the
     since-last-advance lateness vector, and the pending buffer all live in
     per-key streaming state, so the reorder continues seamlessly across
     micro-batches (equivalence with the batch replay on the same arrival
@@ -715,8 +667,6 @@ def streaming_kslack(
     min(recent ts); punct₂ > punct₁ then lifts the limit past every real
     timestamp and releases the rest).
     """
-    import bisect
-
     key_list = list(key_cols)
     val_list = list(value_cols)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -730,17 +680,12 @@ def streaming_kslack(
         + [f"buf_{c} array<{types[c]}>" for c in val_list]
     )
 
-    def reorder(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (tcurr, k, last_ts, emitted, ts_vect, b_ts, b_arr, *b_vals) = state.get
-            ts_vect = list(ts_vect)
-            buf = [
-                (b_ts[i], b_arr[i], [bv[i] for bv in b_vals])
-                for i in range(len(b_ts))
-            ]
-        else:
-            tcurr = k = last_ts = emitted = 0
-            ts_vect, buf = [], []
+    def step(key, st, rows, eos):
+        tcurr, k, last_ts, emitted, ts_vect, b_ts, b_arr, *b_vals = st
+        ts_vect = list(ts_vect)
+        buf = [
+            (b_ts[i], b_arr[i], [bv[i] for bv in b_vals]) for i in range(len(b_ts))
+        ]
         released: list[list] = []
 
         def extract() -> None:
@@ -755,48 +700,29 @@ def streaming_kslack(
                 i += 1
             del buf[:i]
 
-        keys = list(key) if isinstance(key, tuple) else [key]
-        # applyInPandasWithState delivers a large group as MULTIPLE Arrow
-        # chunks (arrow.maxRecordsPerBatch, default 10k) with no cross-chunk
-        # order guarantee — concatenate first so the arrival_col sort (the
-        # documented replay order) spans the whole micro-batch, not each
-        # chunk independently.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        merged = (
-            pd.concat(chunks, ignore_index=True).sort_values(arrival_col)
-            if chunks
-            else None
-        )
-        if merged is not None:
-            for row in merged.to_dict("records"):
-                ts = int(row[ts_col])
-                ts_vect.append(ts)
-                entry = (ts, int(row[arrival_col]), [row[c] for c in val_list])
-                bisect.insort(buf, entry, key=lambda e: (e[0], e[1]))
-                if ts > tcurr:
-                    tcurr = ts
-                    k = max(k, max(tcurr - t for t in ts_vect))
-                    ts_vect.clear()
-                    extract()
-        out = pd.DataFrame(
-            [
-                keys + [ts, arr] + vals + [emitted + i]
-                for i, (ts, arr, vals) in enumerate(released)
-            ],
-            columns=key_list + [ts_col, arrival_col] + val_list + [emit_col],
-        )
-        emitted += len(released)
-        state.update((
-            tcurr, k, last_ts, emitted, ts_vect,
+        for row in rows.to_dict("records"):
+            ts = int(row[ts_col])
+            ts_vect.append(ts)
+            entry = (ts, int(row[arrival_col]), [row[c] for c in val_list])
+            bisect.insort(buf, entry, key=lambda e: (e[0], e[1]))
+            if ts > tcurr:
+                tcurr = ts
+                k = max(k, max(tcurr - t for t in ts_vect))
+                ts_vect.clear()
+                extract()
+        out = [
+            list(key) + [ts, arr] + vals + [emitted + i]
+            for i, (ts, arr, vals) in enumerate(released)
+        ]
+        return out, (
+            tcurr, k, last_ts, emitted + len(released), ts_vect,
             [e[0] for e in buf], [e[1] for e in buf],
             *[[e[2][j] for e in buf] for j in range(len(val_list))],
-        ))
-        yield out if len(out) else pd.DataFrame(
-            {c: [] for c in key_list + [ts_col, arrival_col] + val_list + [emit_col]}
         )
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        reorder, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    init = (0, 0, 0, 0, [], [], []) + tuple([] for _ in val_list)
+    return keyed_fold(
+        df, key_list, step, out_schema, state_schema, init, order=[arrival_col]
     )
 
 
@@ -849,14 +775,9 @@ def streaming_rolling_zscore(
         z = (c - mean) / math.sqrt(var)
         return math.copysign(math.floor(abs(z) * 100 + 0.5) / 100, z)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            cur_b, cur_c, hist_b, hist_c = state.get
-            hist = list(zip(hist_b, hist_c))
-        else:
-            cur_b, cur_c, hist = -1, 0, []
+    def step(key, st, rows, eos):
+        cur_b, cur_c, hist_b, hist_c = st
+        hist = list(zip(hist_b, hist_c))
         out: list[tuple] = []
 
         def close_current(b_next: int | None) -> None:
@@ -869,47 +790,22 @@ def streaming_rolling_zscore(
             hist = [(bi, ci) for bi, ci in hist if bi >= floor_b]
             cur_b, cur_c = -1, 0
 
-        # Concat ALL chunks before sorting (streaming_funnel's pattern): a
-        # key whose micro-batch rows span multiple Arrow chunks would
-        # otherwise see cross-chunk timestamp inversions and drop
-        # earlier-bucket rows as late.
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None:
-            if eos_col is not None:
-                pdf = pdf.sort_values([eos_col, ts_col])
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                ts = pdf[ts_col].to_numpy(dtype=np.int64)[~flags]
-            else:
-                pdf = pdf.sort_values(ts_col)
-                ts = pdf[ts_col].to_numpy(dtype=np.int64)
-            if len(ts):
-                ub, uc = np.unique(ts // bucket_us, return_counts=True)
-                for b, c in zip(ub.tolist(), uc.tolist()):
-                    if b == cur_b:
-                        cur_c += c
-                    elif b > cur_b:
-                        close_current(b)
-                        cur_b, cur_c = b, c
-                    # b < cur_b: late row for a scored bucket — dropped
-        if eos_seen:
+        ts = rows[ts_col].to_numpy(dtype=np.int64)
+        ub, uc = np.unique(ts // bucket_us, return_counts=True)
+        for b, c in zip(ub.tolist(), uc.tolist()):
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close_current(b)
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for a scored bucket — dropped
+        if eos:
             close_current(None)
-            state.remove()  # constant-state op: no empty entry after EOS
-        else:
-            state.update(
-                (cur_b, cur_c, [b for b, _ in hist], [c for _, c in hist])
-            )
-        cols = key_list + ["bucket_start", "cnt", "zscore"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (cur_b, cur_c, [b for b, _ in hist], [c for _, c in hist])
 
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, key_list, step, out_schema, state_schema, (-1, 0, [], []),
+        order=[ts_col], eos_col=eos_col,
     )
 
 
@@ -956,30 +852,15 @@ def streaming_segment_dedup(
     out_schema = f"{id_col} long, seg_idx long, seg string"
     state_schema = "emitted boolean"
 
-    def keep_first(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        emitted = state.get[0] if state.exists else False
-        rows = []
-        if not emitted:
-            best = None
-            for pdf in pdfs:
-                for r in pdf.itertuples(index=False):
-                    cand = (getattr(r, id_col), r.seg_idx, r.seg)
-                    if best is None or (cand[0], cand[1]) < (best[0], best[1]):
-                        best = cand
-            if best is not None:
-                rows.append(best)
-                emitted = True
-        else:
-            for _ in pdfs:  # drain
-                pass
-        state.update((emitted,))
-        cols = [id_col, "seg_idx", "seg"]
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+    def step(key, st, rows, eos):
+        if st[0] or not len(rows):
+            return [], st
+        first = rows.iloc[0]  # the batch's min (doc_id, seg_idx) wins
+        return [(first[id_col], first["seg_idx"], first["seg"])], (True,)
 
-    return segs.groupBy("_h").applyInPandasWithState(
-        keep_first, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        segs, ["_h"], step, out_schema, state_schema, (False,),
+        order=[id_col, "seg_idx"],
     )
 
 
@@ -1020,32 +901,18 @@ def streaming_heavy_hitters(
     out_schema = f"{col} string, est long"
     state_schema = "toks array<string>, cnts array<long>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            toks, cnts = state.get
-            acc = dict(zip(toks, cnts))
-        else:
-            acc = {}
-        eos = False
-        for pdf in pdfs:
-            for t, c in pdf.loc[~pdf["_eos"], col].value_counts().items():
-                acc[t] = acc.get(t, 0) + int(c)
-            if len(acc) > capacity:
-                cuts = sorted(acc.values(), reverse=True)
-                sub = cuts[capacity]
-                acc = {t: v - sub for t, v in acc.items() if v - sub > 0}
-            eos = eos or bool(pdf["_eos"].any())
-        if eos:
-            state.remove()  # constant-state op: no empty entry after EOS
-            yield pd.DataFrame(
-                {col: list(acc.keys()), "est": list(acc.values())}
-            ) if acc else pd.DataFrame({col: [], "est": []})
-        else:
-            state.update((list(acc.keys()), list(acc.values())))
-            yield pd.DataFrame({col: [], "est": []})
+    def step(key, st, rows, eos):
+        acc = dict(zip(*st))
+        for t, c in rows[col].value_counts().items():
+            acc[t] = acc.get(t, 0) + int(c)
+        if len(acc) > capacity:
+            sub = sorted(acc.values(), reverse=True)[capacity]
+            acc = {t: v - sub for t, v in acc.items() if v - sub > 0}
+        out = list(acc.items()) if eos else []
+        return out, (list(acc.keys()), list(acc.values()))
 
-    return d.groupBy("_bkt").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        d, ["_bkt"], step, out_schema, state_schema, ([], []), eos_col="_eos"
     )
 
 
@@ -1092,30 +959,15 @@ def streaming_cms(
     out_schema = "r int, idx long, counter long"
     state_schema = "cnts array<long>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (cnts,) = state.get
-            cnts = list(cnts)
-        else:
-            cnts = [0] * width
-        eos = False
-        for pdf in pdfs:
-            live = pdf.loc[~pdf["_eos"], "idx"]
-            for i, c in live.value_counts().items():
-                cnts[int(i)] += int(c)
-            eos = eos or bool(pdf["_eos"].any())
-        if eos:
-            state.remove()  # constant-state op: no empty entry after EOS
-            nz = [(key[0], i, c) for i, c in enumerate(cnts) if c > 0]
-            yield pd.DataFrame(nz, columns=["r", "idx", "counter"]) if nz else (
-                pd.DataFrame({"r": [], "idx": [], "counter": []})
-            )
-        else:
-            state.update((cnts,))
-            yield pd.DataFrame({"r": [], "idx": [], "counter": []})
+    def step(key, st, rows, eos):
+        cnts = list(st[0])
+        for i, c in rows["idx"].value_counts().items():
+            cnts[int(i)] += int(c)
+        out = [(key[0], i, c) for i, c in enumerate(cnts) if c > 0] if eos else []
+        return out, (cnts,)
 
-    return d.groupBy("r").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        d, ["r"], step, out_schema, state_schema, ([0] * width,), eos_col="_eos"
     )
 
 
@@ -1145,27 +997,21 @@ def streaming_funnel(
     state_schema = "reached long, t_last long"
     stage_list = list(stages)
 
-    def advance(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        reached, t_last = state.get if state.exists else (-1, -1)
+    def step(key, st, rows, eos):
+        reached, t_last = st
         out = []
-        chunks = [pdf for pdf in pdfs]
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(us_col)
-        for ty, us in zip(pdf[type_col], pdf[us_col]):
+        for ty, us in zip(rows[type_col], rows[us_col]):
             nxt = reached + 1
             if nxt >= len(stage_list):
                 break
             if ty == stage_list[nxt] and (reached < 0 or us > t_last):
                 reached, t_last = nxt, int(us)
                 out.append((key[0], nxt, stage_list[nxt], int(us)))
-        state.update((reached, t_last))
-        cols = [user_col, "stage_idx", "stage", "conv_us"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (reached, t_last)
 
-    return df.select(user_col, type_col, us_col).groupBy(user_col).applyInPandasWithState(
-        advance, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df.select(user_col, type_col, us_col), [user_col], step,
+        out_schema, state_schema, (-1, -1), order=[us_col],
     )
 
 
@@ -1196,34 +1042,19 @@ def streaming_cohort_retention(
     out_schema = "cohort_bucket long, bucket_offset long"
     state_schema = "cohort long, seen array<long>"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cohort, seen_l = state.get
-            seen = set(seen_l)
-        else:
-            cohort, seen = None, set()
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
+    def step(key, st, rows, eos):
+        cohort, seen = st[0], set(st[1])
         out: list[tuple[int, int]] = []
-        if pdf is not None and len(pdf):
-            for b in sorted(set((pdf[us_col] // bucket_us).astype("int64").tolist())):
-                if cohort is None:
-                    cohort = int(b)
-                off = int(b) - cohort
-                if off >= 0 and off not in seen:
-                    seen.add(off)
-                    out.append((cohort, off))
-        state.update((cohort if cohort is not None else -1, sorted(seen)))
-        cols = ["cohort_bucket", "bucket_offset"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for b in sorted(set((rows[us_col] // bucket_us).astype("int64").tolist())):
+            if cohort is None:
+                cohort = int(b)
+            off = int(b) - cohort
+            if off >= 0 and off not in seen:
+                seen.add(off)
+                out.append((cohort, off))
+        return out, (cohort if cohort is not None else -1, sorted(seen))
 
-    return df.groupBy(user_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(df, [user_col], step, out_schema, state_schema, (None, []))
 
 
 def streaming_trending_counts(
@@ -1252,14 +1083,11 @@ def streaming_trending_counts(
     out_schema = f"{key_out}, bucket long, cnt long, prev_cnt long, growth double"
     state_schema = "cur_b long, cur_c long, last_b long, last_c long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, last_b, last_c = state.get
-        else:
-            cur_b, cur_c, last_b, last_c = -1, 0, -1, -1
+    def step(key, st, rows, eos):
+        cur_b, cur_c, last_b, last_c = st
         out: list[tuple] = []
 
-        def close(b_next: int | None) -> None:
+        def close() -> None:
             nonlocal cur_b, cur_c, last_b, last_c
             if cur_b < 0:
                 return
@@ -1269,38 +1097,21 @@ def streaming_trending_counts(
             last_b, last_c = cur_b, cur_c
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close(b)
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
-        if eos_seen:
-            close(None)
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, last_b, last_c))
-        cols = [key_col, "bucket", "cnt", "prev_cnt", "growth"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
+        if eos:
+            close()
+        return out, (cur_b, cur_c, last_b, last_c)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (-1, 0, -1, -1),
+        eos_col=eos_col,
     )
 
 
@@ -1333,11 +1144,8 @@ def streaming_ewma(
     state_schema = "cur_b long, cur_c long, prev_e double, has_prev boolean"
     a, b1 = float(alpha), 1.0 - float(alpha)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev_e, has_prev = state.get
-        else:
-            cur_b, cur_c, prev_e, has_prev = -1, 0, 0.0, False
+    def step(key, st, rows, eos):
+        cur_b, cur_c, prev_e, has_prev = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1349,38 +1157,21 @@ def streaming_ewma(
             prev_e, has_prev = e, True
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
-        if eos_seen:
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
+        if eos:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, prev_e, has_prev))
-        cols = [key_col, "bucket", "cnt", "ewma"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (cur_b, cur_c, prev_e, has_prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (-1, 0, 0.0, False),
+        eos_col=eos_col,
     )
 
 
@@ -1420,11 +1211,8 @@ def streaming_holt(
     a, a1 = float(alpha), 1.0 - float(alpha)
     b, b1 = float(beta), 1.0 - float(beta)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev_l, prev_t, has_prev = state.get
-        else:
-            cur_b, cur_c, prev_l, prev_t, has_prev = -1, 0, 0.0, 0.0, False
+    def step(key, st, rows, eos):
+        cur_b, cur_c, prev_l, prev_t, has_prev = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1449,38 +1237,21 @@ def streaming_holt(
             prev_l, prev_t, has_prev = new_l, new_t, True
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for bk, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                bk, c = int(bk), int(c)
-                if bk == cur_b:
-                    cur_c += c
-                elif bk > cur_b:
-                    close()
-                    cur_b, cur_c = bk, c
-                # bk < cur_b: late row for an emitted bucket — dropped
-        if eos_seen:
+        for bk, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            bk, c = int(bk), int(c)
+            if bk == cur_b:
+                cur_c += c
+            elif bk > cur_b:
+                close()
+                cur_b, cur_c = bk, c
+            # bk < cur_b: late row for an emitted bucket — dropped
+        if eos:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_c, prev_l, prev_t, has_prev))
-        cols = [key_col, "bucket", "cnt", "level", "trend", "forecast_next"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (cur_b, cur_c, prev_l, prev_t, has_prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (-1, 0, 0.0, 0.0, False),
+        eos_col=eos_col,
     )
 
 
@@ -1514,11 +1285,8 @@ def streaming_ohlc(
         "c_us long, c_v double, cnt long"
     )
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = state.get
-        else:
-            bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = -1, 0, 0.0, 0.0, 0.0, 0, 0.0, 0
+    def step(key, st, rows, eos):
+        bkt, o_us, o_v, hi, lo, c_us, c_v, cnt = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -1528,47 +1296,31 @@ def streaming_ohlc(
             out.append(key + (bkt * bucket_us, o_v, hi, lo, c_v, cnt))
             bkt, cnt = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col)
-            for us, v in zip(
-                pdf[us_col].to_numpy(dtype="int64"),
-                pdf[value_col].to_numpy(dtype="float64"),
-            ):
-                us, v, b = int(us), float(v), int(us) // bucket_us
-                if b < bkt:
-                    continue  # late row for an emitted bar — dropped
-                if b != bkt:
-                    close()
-                    bkt = b
-                    o_us, o_v, hi, lo, c_us, c_v, cnt = us, v, v, v, us, v, 1
-                    continue
-                cnt += 1
-                if (us, v) < (o_us, o_v):
-                    o_us, o_v = us, v
-                if (us, v) > (c_us, c_v):
-                    c_us, c_v = us, v
-                hi, lo = max(hi, v), min(lo, v)
-        if eos_seen:
+        for us, v in zip(
+            rows[us_col].to_numpy(dtype="int64"),
+            rows[value_col].to_numpy(dtype="float64"),
+        ):
+            us, v, b = int(us), float(v), int(us) // bucket_us
+            if b < bkt:
+                continue  # late row for an emitted bar — dropped
+            if b != bkt:
+                close()
+                bkt = b
+                o_us, o_v, hi, lo, c_us, c_v, cnt = us, v, v, v, us, v, 1
+                continue
+            cnt += 1
+            if (us, v) < (o_us, o_v):
+                o_us, o_v = us, v
+            if (us, v) > (c_us, c_v):
+                c_us, c_v = us, v
+            hi, lo = max(hi, v), min(lo, v)
+        if eos:
             close()
-            state.remove()
-        else:
-            state.update((bkt, o_us, o_v, hi, lo, c_us, c_v, cnt))
-        cols = [key_col, "bucket", "open", "high", "low", "close", "cnt"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (bkt, o_us, o_v, hi, lo, c_us, c_v, cnt)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema,
+        (-1, 0, 0.0, 0.0, 0.0, 0, 0.0, 0), order=[us_col], eos_col=eos_col,
     )
 
 
@@ -1601,49 +1353,27 @@ def streaming_scd2(
     )
     state_schema = "attr string, attr_null boolean, vfrom long, ver long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            attr, attr_null, vfrom, ver = state.get
-        else:
-            attr, attr_null, vfrom, ver = None, True, -1, 0
+    def step(key, st, rows, eos):
+        attr, attr_null, vfrom, ver = st
         has_open = ver > 0
         out: list[tuple] = []
-
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col, kind="stable")
-            for us, a in zip(pdf[us_col].to_numpy(dtype="int64"), pdf[attr_col]):
-                us = int(us)
-                a = None if pd.isna(a) else str(a)
-                a_null = a is None
-                if has_open and a_null == attr_null and a == attr:
-                    continue  # unchanged: stays in the open version
-                if has_open:
-                    out.append(key + (attr, vfrom, us, ver, False))
-                attr, attr_null, vfrom, ver = a, a_null, us, ver + 1
-                has_open = True
-        if eos_seen:
+        for us, a in zip(rows[us_col].to_numpy(dtype="int64"), rows[attr_col]):
+            us = int(us)
+            a = None if pd.isna(a) else str(a)
+            a_null = a is None
+            if has_open and a_null == attr_null and a == attr:
+                continue  # unchanged: stays in the open version
             if has_open:
-                out.append(key + (attr, vfrom, None, ver, True))
-            state.remove()
-        else:
-            state.update((attr, attr_null, vfrom, ver))
-        cols = [key_col, attr_col, "valid_from", "valid_to", "version_seq",
-                "is_current"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+                out.append(key + (attr, vfrom, us, ver, False))
+            attr, attr_null, vfrom, ver = a, a_null, us, ver + 1
+            has_open = True
+        if eos and has_open:
+            out.append(key + (attr, vfrom, None, ver, True))
+        return out, (attr, attr_null, vfrom, ver)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (None, True, -1, 0),
+        order=[us_col], eos_col=eos_col,
     )
 
 
@@ -1669,40 +1399,19 @@ def streaming_transitions(
     out_schema = f"{key_col} string, from_type string, to_type string"
     state_schema = "last_ty string, last_us long"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_ty, last_us = state.get
-        else:
-            last_ty, last_us = None, -1
+    def step(key, st, rows, eos):
+        last_ty, last_us = st
         out: list[tuple] = []
+        for us, ty in zip(rows[us_col].to_numpy(dtype="int64"), rows[type_col]):
+            us, ty = int(us), str(ty)
+            if last_ty is not None:
+                out.append(key + (last_ty, ty))
+            last_ty, last_us = ty, us
+        return out, (last_ty, last_us)
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values([us_col, type_col], kind="stable")
-            for us, ty in zip(pdf[us_col].to_numpy(dtype="int64"), pdf[type_col]):
-                us, ty = int(us), str(ty)
-                if last_ty is not None:
-                    out.append(key + (last_ty, ty))
-                last_ty, last_us = ty, us
-        if eos_seen:
-            state.remove()
-        else:
-            state.update((last_ty, last_us))
-        cols = [key_col, "from_type", "to_type"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (None, -1),
+        order=[us_col, type_col], eos_col=eos_col,
     )
 
 
@@ -1735,43 +1444,22 @@ def streaming_forward_fill(
     )
     state_schema = "last_val double, has_val boolean"
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_val, has_val = state.get
-        else:
-            last_val, has_val = 0.0, False
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
+    def step(key, st, rows, eos):
+        last_val, has_val = st
         out: list[tuple] = []
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values([us_col, id_col], kind="stable")
-            for rid, ty, val in zip(
-                pdf[id_col].to_numpy(dtype="int64"),
-                pdf[type_col],
-                pdf[value_col].to_numpy(dtype="float64"),
-            ):
-                if str(ty) == fill_type:
-                    last_val, has_val = float(val), True
-                out.append(key + (int(rid), str(ty),
-                                  last_val if has_val else None))
-        if eos_seen:
-            state.remove()
-        else:
-            state.update((last_val, has_val))
-        cols = [key_col, id_col, type_col, "last_fill_value"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for rid, ty, val in zip(
+            rows[id_col].to_numpy(dtype="int64"),
+            rows[type_col],
+            rows[value_col].to_numpy(dtype="float64"),
+        ):
+            if str(ty) == fill_type:
+                last_val, has_val = float(val), True
+            out.append(key + (int(rid), str(ty), last_val if has_val else None))
+        return out, (last_val, has_val)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (0.0, False),
+        order=[us_col, id_col], eos_col=eos_col,
     )
 
 
@@ -1803,52 +1491,22 @@ def streaming_weighted_sample(
     )
     state_schema = "arr array<double>, ids array<long>, ws array<long>"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        best: list[tuple] = []
-        if state.exists:
-            arr, ids, ws = state.get
-            best = list(zip(arr, ids, ws))
-        eos_seen = False
-        for pdf in pdfs:
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = eos_seen or bool(flags.any())
-                pdf = pdf[~flags]
+    def step(key, st, rows, eos):
+        best = list(zip(*st))
+        best.extend(
+            (float(a), int(i), int(w))
             for a, i, w in zip(
-                pdf[arrival_col].tolist(),
-                pdf[id_col].tolist(),
-                pdf[weight_col].tolist(),
-            ):
-                best.append((float(a), int(i), int(w)))
+                rows[arrival_col].tolist(), rows[id_col].tolist(), rows[weight_col].tolist()
+            )
+        )
         # k smallest by (arrival, id) — the batch window's exact ordering
         best.sort(key=lambda t: (t[0], t[1]))
         best = best[:k]
-        if eos_seen:
-            state.remove()  # constant-state op: no entry after EOS
-            out = pd.DataFrame(
-                [
-                    (key[0], i, w, rk + 1)
-                    for rk, (_, i, w) in enumerate(best)
-                ],
-                columns=[key_col, id_col, weight_col, "rk"],
-            )
-            yield out
-        else:
-            state.update(
-                (
-                    [a for a, _, _ in best],
-                    [i for _, i, _ in best],
-                    [w for _, _, w in best],
-                )
-            )
-            yield pd.DataFrame(
-                {c: [] for c in [key_col, id_col, weight_col, "rk"]}
-            )
+        out = [(key[0], i, w, rk + 1) for rk, (_, i, w) in enumerate(best)] if eos else []
+        return out, ([a for a, _, _ in best], [i for _, i, _ in best], [w for _, _, w in best])
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, ([], [], []), eos_col=eos_col
     )
 
 
@@ -1885,13 +1543,8 @@ def streaming_alert_hysteresis(
     )
     state_schema = "cur_b long, cur_c long, prev long"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_c, prev = state.get
-        else:
-            cur_b, cur_c, prev = -1, 0, -1  # prev -1 = no emitted bucket yet
+    def step(key, st, rows, eos):
+        cur_b, cur_c, prev = st  # prev -1 = no emitted bucket yet
         out: list[tuple] = []
 
         def close() -> None:
@@ -1904,50 +1557,24 @@ def streaming_alert_hysteresis(
                 alert = False
             else:
                 alert = prev == 1
-            out.append(
-                key
-                + (
-                    cur_b * bucket_us,
-                    cur_c,
-                    alert,
-                    alert and prev != 1,
-                )
-            )
+            out.append(key + (cur_b * bucket_us, cur_c, alert, alert and prev != 1))
             prev = 1 if alert else 0
             cur_b, cur_c = -1, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for b, c in (
-                (pdf[us_col] // bucket_us).value_counts().sort_index().items()
-            ):
-                b, c = int(b), int(c)
-                if b == cur_b:
-                    cur_c += c
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_c = b, c
-                # b < cur_b: late row for an emitted bucket — dropped
-        if eos_seen:
+        for b, c in (rows[us_col] // bucket_us).value_counts().sort_index().items():
+            b, c = int(b), int(c)
+            if b == cur_b:
+                cur_c += c
+            elif b > cur_b:
+                close()
+                cur_b, cur_c = b, c
+            # b < cur_b: late row for an emitted bucket — dropped
+        if eos:
             close()
-            state.remove()  # constant-state op: no entry after EOS
-        else:
-            state.update((cur_b, cur_c, prev))
-        cols = [key_col, "bucket", "cnt", "alert", "is_start"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (cur_b, cur_c, prev)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema, (-1, 0, -1), eos_col=eos_col
     )
 
 
@@ -1973,39 +1600,42 @@ def streaming_debounce(
     out_schema = f"{key_schema}, us long"
     state_schema = "last_us long"
 
-    def fold(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        last = state.get[0] if state.exists else None
-        if last is not None and last < 0:
-            last = None  # -1 sentinel = no raw event seen yet
+    def step(key, st, rows, eos):
+        last = None if st[0] < 0 else st[0]  # -1 sentinel = no raw event seen yet
         out: list[tuple] = []
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            for u in sorted(int(x) for x in pdf[us_col].tolist()):
-                if last is None or u - last > gap_us:
-                    out.append(key + (u,))
-                last = u
-        if eos_seen:
-            state.remove()  # constant-state op: no entry after EOS
-        else:
-            state.update((last if last is not None else -1,))
-        cols = [*key_cols, "us"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        for u in rows[us_col].tolist():
+            u = int(u)
+            if last is None or u - last > gap_us:
+                out.append(key + (u,))
+            last = u
+        return out, (last if last is not None else -1,)
 
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, list(key_cols), step, out_schema, state_schema, (-1,),
+        order=[us_col], eos_col=eos_col,
     )
+
+
+_ASOF_EMPTY = ([], [], [], [], [], False, False)
+
+
+def _asof_buffer(st, rows: pd.DataFrame):
+    """Append one micro-batch of side-tagged as-of rows to the key's
+    buffers; a side's ``eos`` row marks that side done. Returns
+    ``((a_ids, a_us, b_ids, b_us, b_vals), a_done, b_done)``."""
+    *bufs, a_done, b_done = st
+    a_ids, a_uss, b_ids, b_uss, b_vals = (list(x) for x in bufs)
+    flags = rows["eos"].fillna(False).to_numpy(dtype=bool)
+    is_a = rows["side"].to_numpy() == 0
+    a_done = a_done or bool((flags & is_a).any())
+    b_done = b_done or bool((flags & ~is_a).any())
+    a, b = rows[~flags & is_a], rows[~flags & ~is_a]
+    a_ids += a["id"].astype("int64").tolist()
+    a_uss += a["us"].astype("int64").tolist()
+    b_ids += b["id"].astype("int64").tolist()
+    b_uss += b["us"].astype("int64").tolist()
+    b_vals += b["val"].astype("float64").tolist()
+    return (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done
 
 
 def streaming_asof_join_backward(
@@ -2066,56 +1696,26 @@ def streaming_asof_join_backward(
         "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
     )
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = state.get
-            a_ids, a_uss = list(a_ids), list(a_uss)
-            b_ids, b_uss, b_vals = list(b_ids), list(b_uss), list(b_vals)
-        else:
-            a_ids, a_uss, b_ids, b_uss, b_vals = [], [], [], [], []
-            a_done = b_done = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                if bool(r.eos):
-                    if r.side == 0:
-                        a_done = True
-                    else:
-                        b_done = True
-                elif r.side == 0:
-                    a_ids.append(int(r.id))
-                    a_uss.append(int(r.us))
-                else:
-                    b_ids.append(int(r.id))
-                    b_uss.append(int(r.us))
-                    b_vals.append(float(r.val))
-        cols = ["k", "a_id", "a_us", "b_id", "b_val"]
-        if a_done and b_done:
-            # flush: sort b once by (us, id, val) so "last at-or-before"
-            # lands on the greatest payload among equal timestamps —
-            # the batch form's struct tie-break
-            order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
-            s_us = [b_uss[i] for i in order]
-            rows = []
-            import bisect
+    def step(key, st, rows, eos):
+        (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done = _asof_buffer(st, rows)
+        if not (a_done and b_done):
+            return [], (a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done)
+        # flush: sort b once by (us, id, val) so "last at-or-before" lands on
+        # the greatest payload among equal timestamps — the batch form's
+        # struct tie-break
+        order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
+        s_us = [b_uss[i] for i in order]
+        out = []
+        for aid, aus in zip(a_ids, a_uss):
+            j = bisect.bisect_right(s_us, aus) - 1
+            if j >= 0:
+                i = order[j]
+                out.append((key[0], aid, aus, b_ids[i], b_vals[i]))
+            else:
+                out.append((key[0], aid, aus, None, None))
+        return out, None
 
-            for aid, aus in zip(a_ids, a_uss):
-                j = bisect.bisect_right(s_us, aus) - 1
-                if j >= 0:
-                    i = order[j]
-                    rows.append((key[0], aid, aus, b_ids[i], b_vals[i]))
-                else:
-                    rows.append((key[0], aid, aus, None, None))
-            state.remove()
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-        else:
-            state.update((a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done))
-            yield pd.DataFrame({c: [] for c in cols})
-
-    return u.groupBy("k").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(u, ["k"], step, out_schema, state_schema, _ASOF_EMPTY)
 
 
 def streaming_asof_join_backward_bounded(
@@ -2176,7 +1776,7 @@ def streaming_asof_join_backward_bounded(
         return sel.withWatermark("_ts", f"{max(watermark_us, 0)} microsecond")
 
     # the watermark-annotated _ts column must REACH the stateful operator
-    # (dropping it un-sets the watermark for applyInPandasWithState)
+    # (dropping it un-sets the watermark for the keyed-state fold)
     u = _side(a, a_us_col, a_id_col, 0).unionByName(
         _side(b, b_us_col, b_id_col, 1, b_val_col)
     )
@@ -2188,39 +1788,13 @@ def streaming_asof_join_backward_bounded(
     )
     cols = ["k", "a_id", "a_us", "b_id", "b_val"]
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import bisect
-
-        if state.exists:
-            a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done = state.get
-            a_ids, a_uss = list(a_ids), list(a_uss)
-            b_ids, b_uss, b_vals = list(b_ids), list(b_uss), list(b_vals)
-        else:
-            a_ids, a_uss, b_ids, b_uss, b_vals = [], [], [], [], []
-            a_done = b_done = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                if bool(r.eos):
-                    if r.side == 0:
-                        a_done = True
-                    else:
-                        b_done = True
-                elif r.side == 0:
-                    a_ids.append(int(r.id))
-                    a_uss.append(int(r.us))
-                else:
-                    b_ids.append(int(r.id))
-                    b_uss.append(int(r.us))
-                    b_vals.append(float(r.val))
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
+    def step(key, st, rows, eos, wm_us):
+        (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done = _asof_buffer(st, rows)
         flush_all = a_done and b_done
         # finalize: a rows strictly below the watermark (all their b
         # candidates have arrived), or everything on EOS drain
-        ready = [
-            i for i, aus in enumerate(a_uss) if flush_all or aus < wm_us
-        ]
-        rows = []
+        ready = [i for i, aus in enumerate(a_uss) if flush_all or aus < wm_us]
+        out = []
         if ready:
             order = sorted(
                 range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i])
@@ -2231,30 +1805,28 @@ def streaming_asof_join_backward_bounded(
                 j = bisect.bisect_right(s_us, aus) - 1
                 if j >= 0 and s_us[j] >= aus - lookback_us:
                     bi = order[j]
-                    rows.append((key[0], aid, aus, b_ids[bi], b_vals[bi]))
+                    out.append((key[0], aid, aus, b_ids[bi], b_vals[bi]))
                 else:
-                    rows.append((key[0], aid, aus, None, None))
+                    out.append((key[0], aid, aus, None, None))
         if flush_all:
-            state.remove()
-        else:
-            ready_set = set(ready)
-            keep_a = [i for i in range(len(a_ids)) if i not in ready_set]
-            a_ids = [a_ids[i] for i in keep_a]
-            a_uss = [a_uss[i] for i in keep_a]
-            # prune expired quotes: pending and future a rows sit at or
-            # above the watermark, so nothing below wm − lookback matches
-            cutoff = wm_us - lookback_us
-            keep_b = [i for i in range(len(b_ids)) if b_uss[i] >= cutoff]
-            b_ids = [b_ids[i] for i in keep_b]
-            b_uss = [b_uss[i] for i in keep_b]
-            b_vals = [b_vals[i] for i in keep_b]
-            state.update((a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done))
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
+            return out, None
+        ready_set = set(ready)
+        keep_a = [i for i in range(len(a_ids)) if i not in ready_set]
+        # prune expired quotes: pending and future a rows sit at or above
+        # the watermark, so nothing below wm − lookback matches
+        keep_b = [i for i in range(len(b_ids)) if b_uss[i] >= wm_us - lookback_us]
+        return out, (
+            [a_ids[i] for i in keep_a],
+            [a_uss[i] for i in keep_a],
+            [b_ids[i] for i in keep_b],
+            [b_uss[i] for i in keep_b],
+            [b_vals[i] for i in keep_b],
+            a_done,
+            b_done,
         )
 
-    return u.groupBy("k").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        u, ["k"], step, out_schema, state_schema, _ASOF_EMPTY, watermark=True
     )
 
 
@@ -2298,26 +1870,9 @@ def streaming_space_saving(
     state_schema = "items array<string>, counts array<long>, errs array<long>"
     cols = ["key", "item", "count_est", "err_bound", "rank"]
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        items, counts, errs = (
-            ([list(x) for x in state.get]) if state.exists else ([], [], [])
-        )
-        done = False
-        # Concatenate ALL Arrow chunks before the single sort: a micro-batch
-        # larger than arrow.maxRecordsPerBatch arrives as multiple chunks,
-        # and per-chunk sorting would make the fold order depend on the
-        # chunking — the (us, item) order must be a pure function of the
-        # data for exact ordered-replay parity (same fix as the asof fold).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True).sort_values(["us", "item"])
-            if chunks
-            else pd.DataFrame({"item": [], "eos": []})
-        )
-        for item, is_eos in zip(batch["item"], batch["eos"]):
-            if is_eos:
-                done = True
-                continue
+    def step(key, st, rows, eos):
+        items, counts, errs = (list(x) for x in st)
+        for item in rows["item"]:
             if item in items:
                 counts[items.index(item)] += 1
             elif len(items) < k:
@@ -2328,22 +1883,16 @@ def streaming_space_saving(
                 v = min(range(len(items)), key=lambda i: (counts[i], items[i]))
                 vc = counts[v]
                 items[v], counts[v], errs[v] = item, vc + 1, vc
-        if done:
-            order = sorted(range(len(items)), key=lambda i: (-counts[i], items[i]))
-            rows = [
-                (key[0], items[i], counts[i], errs[i], r + 1)
-                for r, i in enumerate(order)
-            ]
-            state.remove()
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-        else:
-            state.update((items, counts, errs))
-            yield pd.DataFrame({c: [] for c in cols})
+        if not eos:
+            return [], (items, counts, errs)
+        order = sorted(range(len(items)), key=lambda i: (-counts[i], items[i]))
+        return [
+            (key[0], items[i], counts[i], errs[i], r + 1) for r, i in enumerate(order)
+        ], None
 
-    return sel.groupBy("key").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        sel, ["key"], step, out_schema, state_schema, ([], [], []),
+        order=["us", "item"], eos_col="eos",
     )
 
 
@@ -2387,46 +1936,26 @@ def streaming_kmv_distinct(
     cols = ["key", "n_kept", "h_k", "kmv_est"]
     m_space = float(16**15)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import bisect
+    def step(key, st, rows, eos):
+        hs = list(st[0])
+        for item in rows["item"]:
+            # 15 hex digits = 60 bits, the batch query's hash space
+            hv = int(hashlib.md5(str(item).encode("utf-8")).hexdigest()[:15], 16)
+            if len(hs) == k and hv >= hs[-1]:
+                continue  # cannot enter the k smallest
+            # hs is kept sorted: O(log k) membership + insert
+            i = bisect.bisect_left(hs, hv)
+            if i >= len(hs) or hs[i] != hv:
+                hs.insert(i, hv)
+                del hs[k:]
+        if not eos:
+            return [], (hs,)
+        n_kept = len(hs)
+        h_k = hs[-1] if hs else None
+        est = float(n_kept) if n_kept < k else (k - 1) * m_space / float(h_k)
+        return [(key[0], n_kept, h_k, est)], None
 
-        hs = list(state.get[0]) if state.exists else []
-        done = False
-        for pdf in pdfs:
-            for item, is_eos in zip(pdf["item"], pdf["eos"]):
-                if is_eos:
-                    done = True
-                    continue
-                # 15 hex digits = 60 bits, the batch query's hash space
-                hv = int(
-                    hashlib.md5(str(item).encode("utf-8")).hexdigest()[:15], 16
-                )
-                if len(hs) == k and hv >= hs[-1]:
-                    continue  # cannot enter the k smallest
-                # hs is kept sorted: O(log k) membership + insert
-                i = bisect.bisect_left(hs, hv)
-                if i >= len(hs) or hs[i] != hv:
-                    hs.insert(i, hv)
-                    del hs[k:]
-        if done:
-            n_kept = len(hs)
-            h_k = hs[-1] if hs else None
-            est = (
-                float(n_kept)
-                if n_kept < k
-                else (k - 1) * m_space / float(h_k)
-            )
-            state.remove()
-            yield pd.DataFrame(
-                [(key[0], n_kept, h_k, est)], columns=cols
-            )
-        else:
-            state.update((hs,))
-            yield pd.DataFrame({c: [] for c in cols})
-
-    return sel.groupBy("key").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(sel, ["key"], step, out_schema, state_schema, ([],), eos_col="eos")
 
 
 def streaming_page_hinkley(
@@ -2467,11 +1996,8 @@ def streaming_page_hinkley(
     )
     dlt, lm = float(delta), float(lam)
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = state.get
-        else:
-            cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = -1, 0.0, 0, 0, 0.0, 0.0, 0.0
+    def step(key, st, rows, eos):
+        cur_b, cur_s, cur_c, t, cum_z, ph, min_ph = st
         out: list[tuple] = []
 
         def close() -> None:
@@ -2488,38 +2014,20 @@ def streaming_page_hinkley(
             out.append(key + (cur_b * bucket_us, z, ph, exc, exc > lm))
             cur_b, cur_s, cur_c = -1, 0.0, 0
 
-        chunks = list(pdfs)
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else (
-            chunks[0] if chunks else None
-        )
-        eos_seen = False
-        if pdf is not None and len(pdf):
-            if eos_col is not None:
-                flags = pdf[eos_col].fillna(False).to_numpy(dtype=bool)
-                eos_seen = bool(flags.any())
-                pdf = pdf.loc[~flags]
-            pdf = pdf.sort_values(us_col, kind="stable")
-            for us, v in zip(
-                pdf[us_col].to_numpy(), pdf[value_col].to_numpy(dtype=float)
-            ):
-                b = int(us) // bucket_us
-                if b == cur_b:
-                    cur_s += v
-                    cur_c += 1
-                elif b > cur_b:
-                    close()
-                    cur_b, cur_s, cur_c = b, v, 1
-                # b < cur_b: late row for an emitted bucket — dropped
-        if eos_seen:
+        for us, v in zip(rows[us_col].to_numpy(), rows[value_col].to_numpy(dtype=float)):
+            b = int(us) // bucket_us
+            if b == cur_b:
+                cur_s += v
+                cur_c += 1
+            elif b > cur_b:
+                close()
+                cur_b, cur_s, cur_c = b, v, 1
+            # b < cur_b: late row for an emitted bucket — dropped
+        if eos:
             close()
-            state.remove()
-        else:
-            state.update((cur_b, cur_s, cur_c, t, cum_z, ph, min_ph))
-        cols = [key_col, "bucket", "z", "ph", "excursion", "alert"]
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return out, (cur_b, cur_s, cur_c, t, cum_z, ph, min_ph)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        df, [key_col], step, out_schema, state_schema,
+        (-1, 0.0, 0, 0, 0.0, 0.0, 0.0), order=[us_col], eos_col=eos_col,
     )

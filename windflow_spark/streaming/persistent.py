@@ -8,7 +8,7 @@ serialize/deserialize wf/persistent/builders_rocksdb.hpp:346-363).
 
 Spark-first mapping: keyed state lives in the streaming STATE STORE, and
 durability is a provider config (rocksdb_state_conf()), not per-operator
-plumbing — `applyInPandasWithState` gives the user callable the same
+plumbing — `keyed_fold` (streaming/keyed.py) gives the user callable the same
 (tuple, state) contract, serialized by Arrow instead of user functions.
 The per-key LRU/LFU caches of the reference (wf/persistent/cache/*) are
 subsumed by the state store's block cache.
@@ -22,44 +22,27 @@ declarative forms in streaming/ops.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from windflow_spark.streaming.keyed import field_names, keyed_fold
 
 __all__ = ["p_map", "p_filter", "p_flatmap", "p_reduce", "p_reduce_tws"]
 
 
-def _stateful(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_col: str,
-    output_schema: str,
-    state_schema: str,
-    init_state: tuple,
-    per_row: Callable[[dict, list], Any],
-    collect: Callable[[dict, Any, list[dict]], None],
-) -> DataFrame:
-    """Shared driver: per key, rows are folded through ``per_row(row,
-    state)`` in ``order_col`` order (the reference's per-key arrival order);
-    ``collect`` decides what each call appends to the output."""
-    key_list = list(key_cols)
+def _per_row(emit: Callable[[dict, list], list[Any]]):
+    """Step for the keyed-state driver that folds each row, in order, through
+    ``emit(row, state) -> output rows`` (the reference's per-key arrival
+    order); ``state`` is a mutable list carried across rows and batches."""
 
-    def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st = list(state.get) if state.exists else list(init_state)
-        out: list[dict] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for row in pdf.to_dict("records"):
-                collect(row, per_row(row, st), out)
-        state.update(tuple(st))
-        yield pd.DataFrame(out) if out else pd.DataFrame()
+    def step(key, st, rows, eos):
+        st = list(st)
+        return [o for row in rows.to_dict("records") for o in emit(row, st)], st
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return step
 
 
 def p_map(
@@ -74,9 +57,9 @@ def p_map(
     """P_Map: 1→1 transform with per-key persistent state. ``func(row,
     state) -> out_row`` mutates ``state`` in place (the reference's
     ``result_t(tuple&, state_t&)``, wf/persistent/p_map.hpp:272)."""
-    return _stateful(
-        df, key_cols, order_col, output_schema, state_schema, init_state,
-        func, lambda row, res, out: out.append(res),
+    return keyed_fold(
+        df, key_cols, _per_row(lambda row, st: [func(row, st)]),
+        output_schema, state_schema, init_state, order=[order_col],
     )
 
 
@@ -91,9 +74,9 @@ def p_filter(
 ) -> DataFrame:
     """P_Filter: keep the row iff ``predicate(row, state)`` — e.g. stateful
     dedup or rate limiting per key (wf/persistent/p_filter.hpp:292)."""
-    return _stateful(
-        df, key_cols, order_col, output_schema, state_schema, init_state,
-        predicate, lambda row, res, out: out.append(row) if res else None,
+    return keyed_fold(
+        df, key_cols, _per_row(lambda row, st: [row] if predicate(row, st) else []),
+        output_schema, state_schema, init_state, order=[order_col],
     )
 
 
@@ -109,9 +92,9 @@ def p_flatmap(
     """P_FlatMap: 1→N with per-key persistent state; ``func`` returns a list
     of output rows (the reference ships via Shipper,
     wf/persistent/p_flatmap.hpp:256)."""
-    return _stateful(
-        df, key_cols, order_col, output_schema, state_schema, init_state,
-        func, lambda row, res, out: out.extend(res),
+    return keyed_fold(
+        df, key_cols, _per_row(func), output_schema, state_schema, init_state,
+        order=[order_col],
     )
 
 
@@ -142,35 +125,25 @@ def p_reduce(
     ``func`` may be None when ``vector_fold`` is given.
     """
     key_list = list(key_cols)
-    state_names = [f.split()[0] for f in state_schema.split(",")]
+    state_names = field_names(state_schema)
 
-    if vector_fold is not None:
+    def vector_step(key, st, rows, eos):
+        state_vals, st = vector_fold(tuple(st), rows)
+        res = rows[key_list + [order_col]].reset_index(drop=True)
+        for name in state_names:
+            res[name] = state_vals[name].reset_index(drop=True)
+        return res, st
 
-        def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-            st = tuple(state.get) if state.exists else tuple(init_state)
-            for pdf in pdfs:
-                pdf = pdf.sort_values(order_col)
-                state_vals, st = vector_fold(st, pdf)
-                res = pdf[key_list + [order_col]].reset_index(drop=True)
-                for name in state_names:
-                    res[name] = state_vals[name].reset_index(drop=True)
-                yield res
-            state.update(tuple(st))
-
-        return df.groupBy(*key_list).applyInPandasWithState(
-            fold, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-
-    def per_row_and_emit(row: dict, st: list) -> dict:
+    def emit(row: dict, st: list) -> list[dict]:
         func(row, st)
         rec = {k: row[k] for k in key_list}
         rec[order_col] = row[order_col]
         rec.update(zip(state_names, st))
-        return rec
+        return [rec]
 
-    return _stateful(
-        df, key_cols, order_col, output_schema, state_schema, init_state,
-        per_row_and_emit, lambda row, res, out: out.append(res),
+    step = vector_step if vector_fold is not None else _per_row(emit)
+    return keyed_fold(
+        df, key_list, step, output_schema, state_schema, init_state, order=[order_col]
     )
 
 
@@ -190,7 +163,7 @@ def p_reduce_tws(
     API REQUIRES the RocksDB provider; apply rocksdb_state_conf()).
     Runtime dependency: the transformWithState driver worker speaks
     protobuf — environments without ``google.protobuf`` must use the
-    applyInPandasWithState form (p_reduce), which is dependency-free.
+    grouped-state form (p_reduce), which is dependency-free.
 
     Prefer this form for new code: ValueState/ListState/MapState compose,
     state has TTL support, and schema evolution is handled by the store —
@@ -203,7 +176,7 @@ def p_reduce_tws(
     )
 
     key_list = list(key_cols)
-    state_names = [f.split()[0] for f in state_schema.split(",")]
+    state_names = field_names(state_schema)
 
     class _Fold(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:

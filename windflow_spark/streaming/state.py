@@ -3,7 +3,7 @@
 WindFlow's P_Filter/P_Map/P_Reduce/P_Keyed_Windows keep per-key state in
 RocksDB (reference wf/persistent/p_filter.hpp:292 etc.). In Spark the same
 durability is a STATE STORE PROVIDER config, not per-operator code: every
-stateful streaming operator (windows, dedup, applyInPandasWithState) puts
+stateful streaming operator (windows, dedup, the keyed_fold operators) puts
 its keyed state in RocksDB with changelog checkpointing.
 """
 

@@ -73,3 +73,17 @@ def maybe_broadcast(df: DataFrame, est_bytes: int | None) -> DataFrame:
     except Exception:
         cap = 256 * 1024 * 1024
     return F.broadcast(df) if est_bytes <= cap else df
+
+
+def release_cache(spark) -> int:
+    """Drop every cached table, then unpersist every persisted RDD; return
+    how many RDDs were still persisted. ``spark.catalog.clearCache()`` alone
+    misses ``persist()``/``localCheckpoint`` RDDs made inside query
+    constructors, so a timed run that skipped this could read data cached
+    by the run before it."""
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    ids = list(rdds.keySet())
+    for rdd_id in ids:
+        rdds.get(rdd_id).unpersist(True)
+    return len(ids)
