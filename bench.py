@@ -86,7 +86,9 @@ def build_payload(
     return payload
 
 
-def _run_once(fn, spark, sf_dir) -> float:
+def run_once(fn, spark, sf_dir) -> float:
+    """One timed invocation of query constructor ``fn`` through the noop
+    sink; the bench and the profiling tools all time queries with it."""
     # a timed invocation must never read data cached by an earlier one
     release_cache(spark)
     t0 = time.time()
@@ -94,29 +96,19 @@ def _run_once(fn, spark, sf_dir) -> float:
     return time.time() - t0
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    commit_capture = "--commit-capture" in sys.argv[1:]
-    import __spark_entry__ as entry_mod
-    from windflow_spark import get_spark
-
-    spark = get_spark("windflow-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = entry_mod.queries()
-    # Warmup (excluded from per-query times): touch every table's data so
-    # first-scan I/O lands in the page cache, and run one trivial pandas_udf
-    # so the Python worker pool is spawned — both are one-time process
-    # costs, not per-query throughput.
+def warm_session(spark, sf_dir) -> None:
+    """Warm-up excluded from per-query times: touch every table's data so
+    first-scan I/O lands in the page cache, and run one trivial pandas_udf
+    so the Python worker pool is spawned — both are one-time process
+    costs, not per-query throughput."""
     from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
     from windflow_spark.tables import TABLE_NAMES, load_table
 
     for name in TABLE_NAMES:
         t = load_table(spark, name, sf_dir)
         t.agg(*[F.count(c) for c in t.columns[:4]]).collect()
-
-    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _warm(x: pd.Series) -> pd.Series:
@@ -135,6 +127,20 @@ def main() -> None:
         F.avg("id").alias("a"),
     ).write.mode("overwrite").format("noop").save()
 
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+    commit_capture = "--commit-capture" in sys.argv[1:]
+    import __spark_entry__ as entry_mod
+    from windflow_spark import get_spark
+
+    spark = get_spark("windflow-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    qs = entry_mod.queries()
+    warm_session(spark, sf_dir)
+
     # Drift sentinel: min-of-3 per pinned query, measured in a quiet
     # context right after warmup. sentinel_sec normalizes machine drift
     # across rounds (same code + same data ⇒ ratio of sentinel_sec is the
@@ -143,7 +149,7 @@ def main() -> None:
     for name in SENTINELS:
         if name not in qs:
             continue
-        runs = [_run_once(qs[name], spark, sf_dir) for _ in range(3)]
+        runs = [run_once(qs[name], spark, sf_dir) for _ in range(3)]
         sentinel_times[name] = round(min(runs), 3)
     sentinel_sec = sum(sentinel_times.values())
 
@@ -160,7 +166,7 @@ def main() -> None:
             if name in failed:
                 continue
             try:
-                all_runs[name].append(_run_once(qs[name], spark, sf_dir))
+                all_runs[name].append(run_once(qs[name], spark, sf_dir))
             except Exception as e:  # a failing query must not hide the rest
                 failed.add(name)
                 print(f"bench error in {name}: {e}", file=sys.stderr)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -42,18 +43,20 @@ def test_tumbling_window_accepts_ntz(spark):
     assert got == want and len(got) == 4
 
 
-def test_interval_join_accepts_ntz(spark):
-    from windflow_spark.operators.interval_join import interval_join
+@pytest.mark.parametrize(
+    "join", ["interval_join", "interval_join_bucketed", "interval_join_full_bucketed"]
+)
+def test_interval_join_accepts_ntz(spark, join):
+    import importlib
 
+    # by path: windflow_spark.operators binds `interval_join` to the function
+    mod = importlib.import_module("windflow_spark.operators.interval_join")
+    fn = getattr(mod, join)
     ltz, ntz = _frames(spark)
     HOUR = 3_600_000_000
-    want = sorted(
-        map(tuple, interval_join(ltz, ltz, ["key"], "ts", "ts", 0, HOUR).collect())
-    )
-    got = sorted(
-        map(tuple, interval_join(ntz, ntz, ["key"], "ts", "ts", 0, HOUR).collect())
-    )
-    assert len(got) == len(want) > 0
+    want = sorted(map(tuple, fn(ltz, ltz, ["key"], "ts", "ts", 0, HOUR).collect()))
+    got = sorted(map(tuple, fn(ntz, ntz, ["key"], "ts", "ts", 0, HOUR).collect()))
+    assert got == want and len(got) > 0
 
 
 def test_event_micros_is_session_tz_independent(spark):

@@ -17,9 +17,6 @@ import os
 import subprocess
 import sys
 import tempfile
-import time
-
-import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -49,49 +46,26 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
+    from bench import run_once, warm_session
     from windflow_spark import get_spark
-    from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Qnew
-    from windflow_spark.util import release_cache
 
     Qold = load_ref_queries(args.ref)
 
     spark = get_spark("ab-prof")
     spark.sparkContext.setLogLevel("ERROR")
 
-    for name in TABLE_NAMES:
-        t = load_table(spark, name, args.sf_dir)
-        t.agg(*[F.count(c) for c in t.columns[:4]]).collect()
-
-    @pandas_udf("long")
-    def _warm(x: pd.Series) -> pd.Series:
-        return x
-
-    spark.range(0, 1000, 1, 32).select(_warm("id")).count()
-    spark.range(0, 1000, 1, 8).groupBy((F.col("id") % 7).alias("g")).agg(
-        F.sum("id").alias("s"),
-        F.sum(F.col("id").cast("decimal(18,6)")).alias("d"),
-        F.avg("id").alias("a"),
-    ).write.mode("overwrite").format("noop").save()
-
-    def run(fn) -> float:
-        release_cache(spark)
-        t0 = time.time()
-        fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-        return time.time() - t0
+    warm_session(spark, args.sf_dir)
 
     for name in args.names:
         fa = Qold.QUERIES[name]
         fb = Qnew.QUERIES[name]
         ta, tb = [], []
-        run(fa)  # one unmeasured pair to warm both plans' first-time costs
-        run(fb)
+        run_once(fa, spark, args.sf_dir)  # one unmeasured pair to warm both
+        run_once(fb, spark, args.sf_dir)  # plans' first-time costs
         for _ in range(args.repeats):
-            ta.append(run(fa))
-            tb.append(run(fb))
+            ta.append(run_once(fa, spark, args.sf_dir))
+            tb.append(run_once(fb, spark, args.sf_dir))
         ratios = sorted(b / a for a, b in zip(ta, tb))
         med_ratio = ratios[len(ratios) // 2]
         print(

@@ -29,8 +29,6 @@ import os
 import sys
 import time
 
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -48,11 +46,8 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
+    from bench import warm_session
     from windflow_spark import get_spark
-    from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Q
     from windflow_spark.util import release_cache
 
@@ -67,21 +62,7 @@ def main() -> None:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
 
-    # warmup identical in spirit to bench.py
-    for name in TABLE_NAMES:
-        t = load_table(spark, name, args.sf_dir)
-        t.agg(*[F.count(c) for c in t.columns[:4]]).collect()
-
-    @pandas_udf("long")
-    def _warm(x: pd.Series) -> pd.Series:
-        return x
-
-    spark.range(0, 1000, 1, 32).select(_warm("id")).count()
-    spark.range(0, 1000, 1, 8).groupBy((F.col("id") % 7).alias("g")).agg(
-        F.sum("id").alias("s"),
-        F.sum(F.col("id").cast("decimal(18,6)")).alias("d"),
-        F.avg("id").alias("a"),
-    ).write.mode("overwrite").format("noop").save()
+    warm_session(spark, args.sf_dir)
 
     # floor baselines (min of 10)
     job_floor = min(

@@ -7,8 +7,8 @@ Usage:
   python tools/qprof.py --plans DIR q1 ...   # also write DIR/<q>.txt plans
   python tools/qprof.py --repeats 5 q1 ...
 
-Honors $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py. Warmup
-mirrors bench.py (table footers + python worker + noop committer) so the
+Honors $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py. Warm-up and
+timed invocation are bench.py's own (warm_session, run_once), so the
 first-listed query is not charged one-time session costs.
 """
 
@@ -17,9 +17,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
-
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,13 +37,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
+    from bench import run_once, warm_session
     from windflow_spark import get_spark
-    from windflow_spark.tables import TABLE_NAMES, load_table
     from windflow_spark import queries as Q
-    from windflow_spark.util import release_cache
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("qprof", extra_conf=extra or None)
@@ -58,21 +51,7 @@ def main() -> None:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
 
-    # warmup identical in spirit to bench.py
-    for name in TABLE_NAMES:
-        t = load_table(spark, name, args.sf_dir)
-        t.agg(*[F.count(c) for c in t.columns[:4]]).collect()
-
-    @pandas_udf("long")
-    def _warm(x: pd.Series) -> pd.Series:
-        return x
-
-    spark.range(0, 1000, 1, 32).select(_warm("id")).count()
-    spark.range(0, 1000, 1, 8).groupBy((F.col("id") % 7).alias("g")).agg(
-        F.sum("id").alias("s"),
-        F.sum(F.col("id").cast("decimal(18,6)")).alias("d"),
-        F.avg("id").alias("a"),
-    ).write.mode("overwrite").format("noop").save()
+    warm_session(spark, args.sf_dir)
 
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)
@@ -80,12 +59,7 @@ def main() -> None:
     for name in args.names:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"qprof:{name}")
-        runs = []
-        for _ in range(args.repeats):
-            release_cache(spark)
-            t0 = time.time()
-            fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
+        runs = [run_once(fn, spark, args.sf_dir) for _ in range(args.repeats)]
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name:48s} min={min(runs):7.3f}  runs="

@@ -25,26 +25,20 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def asof_join_backward(
+def _asof_fill(
     a: DataFrame,
     b: DataFrame,
     key_cols: Sequence[str],
     a_ts: str,
     b_ts: str,
     b_payload: Sequence[str],
-    how: str = "left",
-    prefix: str = "b_",
+    how: str,
+    prefix: str,
+    forward: bool,
 ) -> DataFrame:
-    """For each row of ``a``: the ``b`` row of the same key with the largest
-    ``b_ts`` <= ``a_ts`` (inclusive). ``b_payload`` columns arrive prefixed.
-    ``how='left'`` keeps unmatched a-rows (null payload); ``'inner'`` drops
-    them. Ties on ``b_ts`` resolve to the row greatest in ``b_payload``
-    field order — put a unique column first for determinism. NOTE: which
-    same-ts row an engine's native ASOF picks is implementation-defined
-    (DuckDB guarantees no particular tie-break), so oracle-compared
-    callers must dedupe ``b`` on (key, ts) first unless uniqueness is
-    known.
-    """
+    """The union + fill shared by both directions. ``forward`` sets the
+    window frame (following vs preceding), the ``_is_a`` sort direction,
+    the null ordering of ``_bp`` and ``first`` vs ``last``."""
     if how not in ("left", "inner"):
         raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
     keys = list(key_cols)
@@ -69,29 +63,62 @@ def asof_join_backward(
         *[F.lit(None).cast(a_field_types[c]).alias(c) for c in a_payload_cols],
         F.struct(*payload).alias("_bp"),
     )
-    # b rows (_is_a=0) sort before a rows at equal ts → "at or before" is
-    # inclusive; among equal-ts b rows the greatest struct (field order =
-    # payload order) comes last, so the running `last` picks it
-    w = (
-        W.partitionBy(*keys)
-        .orderBy(F.col("_ts"), F.col("_is_a"), F.col("_bp").asc_nulls_first())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    if forward:
+        # a rows (_is_a=1 sorts desc-first) precede b rows at equal ts so the
+        # frame [current, following] includes same-ts b rows (inclusive);
+        # among equal-ts b rows the least struct comes first and `first`
+        # picks it
+        order = [F.col("_is_a").desc(), F.col("_bp").asc_nulls_last()]
+        frame = (W.currentRow, W.unboundedFollowing)
+        fill = F.first("_bp", ignorenulls=True)
+    else:
+        # b rows (_is_a=0) sort before a rows at equal ts → "at or before"
+        # is inclusive; among equal-ts b rows the greatest struct (field
+        # order = payload order) comes last, so the running `last` picks it
+        order = [F.col("_is_a"), F.col("_bp").asc_nulls_first()]
+        frame = (W.unboundedPreceding, W.currentRow)
+        fill = F.last("_bp", ignorenulls=True)
+    w = W.partitionBy(*keys).orderBy(F.col("_ts"), *order).rowsBetween(*frame)
     filled = (
         a_side.unionByName(b_side)
-        .withColumn("_bp", F.last("_bp", ignorenulls=True).over(w))
+        .withColumn("_bp", fill.over(w))
         .filter(F.col("_is_a") == 1)
     )
     if how == "inner":
-        # Unmatched = the fill found no preceding b-row, i.e. the STRUCT
-        # itself is null. Testing a payload FIELD instead would drop a
-        # genuinely matched b-row whose first payload value is NULL
-        # (ADVICE r1) — a struct built from all-null fields is non-null.
+        # Unmatched = the fill found no b-row, i.e. the STRUCT itself is
+        # null. Testing a payload FIELD instead would drop a genuinely
+        # matched b-row whose first payload value is NULL (ADVICE r1) — a
+        # struct built from all-null fields is non-null.
         filled = filled.filter(F.col("_bp").isNotNull())
     return filled.select(
         *[F.col(k) for k in keys],
         *[F.col(c) for c in a_payload_cols],
         *[F.col(f"_bp.{c}").alias(f"{prefix}{c}") for c in payload],
+    )
+
+
+def asof_join_backward(
+    a: DataFrame,
+    b: DataFrame,
+    key_cols: Sequence[str],
+    a_ts: str,
+    b_ts: str,
+    b_payload: Sequence[str],
+    how: str = "left",
+    prefix: str = "b_",
+) -> DataFrame:
+    """For each row of ``a``: the ``b`` row of the same key with the largest
+    ``b_ts`` <= ``a_ts`` (inclusive). ``b_payload`` columns arrive prefixed.
+    ``how='left'`` keeps unmatched a-rows (null payload); ``'inner'`` drops
+    them. Ties on ``b_ts`` resolve to the row greatest in ``b_payload``
+    field order — put a unique column first for determinism. NOTE: which
+    same-ts row an engine's native ASOF picks is implementation-defined
+    (DuckDB guarantees no particular tie-break), so oracle-compared
+    callers must dedupe ``b`` on (key, ts) first unless uniqueness is
+    known.
+    """
+    return _asof_fill(
+        a, b, key_cols, a_ts, b_ts, b_payload, how, prefix, forward=False
     )
 
 
@@ -120,49 +147,8 @@ def asof_join_forward(
     (DuckDB guarantees none), so oracle-compared callers must dedupe ``b``
     on (key, ts) first unless uniqueness is known.
     """
-    if how not in ("left", "inner"):
-        raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
-    keys = list(key_cols)
-    payload = list(b_payload)
-    a_payload_cols = [c for c in a.columns if c not in keys]
-    b_struct_type = (
-        b.select(F.struct(*payload).alias("_bp")).schema["_bp"].dataType.simpleString()
-    )
-
-    a_side = a.select(
-        *[F.col(k) for k in keys],
-        F.col(a_ts).alias("_ts"),
-        F.lit(1).alias("_is_a"),
-        *[F.col(c) for c in a_payload_cols],
-        F.lit(None).cast(b_struct_type).alias("_bp"),
-    )
-    a_field_types = {f.name: f.dataType for f in a.schema.fields}
-    b_side = b.select(
-        *[F.col(k) for k in keys],
-        F.col(b_ts).alias("_ts"),
-        F.lit(0).alias("_is_a"),
-        *[F.lit(None).cast(a_field_types[c]).alias(c) for c in a_payload_cols],
-        F.struct(*payload).alias("_bp"),
-    )
-    # a rows (_is_a=1 sorts desc-first) precede b rows at equal ts so the
-    # frame [current, following] includes same-ts b rows (inclusive); among
-    # equal-ts b rows the least struct comes first and `first` picks it
-    w = (
-        W.partitionBy(*keys)
-        .orderBy(F.col("_ts"), F.col("_is_a").desc(), F.col("_bp").asc_nulls_last())
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    filled = (
-        a_side.unionByName(b_side)
-        .withColumn("_bp", F.first("_bp", ignorenulls=True).over(w))
-        .filter(F.col("_is_a") == 1)
-    )
-    if how == "inner":
-        filled = filled.filter(F.col("_bp").isNotNull())
-    return filled.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c) for c in a_payload_cols],
-        *[F.col(f"_bp.{c}").alias(f"{prefix}{c}") for c in payload],
+    return _asof_fill(
+        a, b, key_cols, a_ts, b_ts, b_payload, how, prefix, forward=True
     )
 
 

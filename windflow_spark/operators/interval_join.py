@@ -12,14 +12,72 @@ wf/basic.hpp:87) maps to a broadcast join — pass ``broadcast_side`` when one
 side is small. At 100 TB the equi-key condition keeps this a partitioned
 equi-join with a residual range predicate (NOT a cross join); AQE handles
 skewed keys.
+
+Batch and streaming share this one implementation: the
+``streaming_interval_join*`` forms in streaming/ops.py only put a watermark
+on both inputs and call these functions, which pick the range predicate's
+form from ``a.isStreaming`` (:func:`_time_band`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from windflow_spark.operators.timeutil import event_micros
+
+
+def _band_join(
+    aa: DataFrame,
+    bb: DataFrame,
+    key_cols: Sequence[str],
+    a_v: Column,
+    b_v: Column,
+    lower: Column,
+    upper: Column,
+    how: str,
+    broadcast_side: str | None = None,
+) -> DataFrame:
+    """Key equality with the inclusive range residual ``b_v ∈ [a_v + lower,
+    a_v + upper]`` — the one condition builder of the interval and band
+    joins. ``broadcast_side`` ∈ {None, 'a', 'b'} selects the reference's DP
+    mode (broadcast) vs KP mode (shuffle)."""
+    if broadcast_side == "a":
+        aa = F.broadcast(aa)
+    elif broadcast_side == "b":
+        bb = F.broadcast(bb)
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    cond += [b_v >= a_v + lower, b_v <= a_v + upper]
+    return aa.join(bb, reduce(and_, cond), how=how)
+
+
+def _time_band(
+    a: DataFrame, b: DataFrame, a_ts: str, b_ts: str, lower_us: int, upper_us: int
+) -> tuple[Column, Column, Column, Column]:
+    """(a value, b value, lower, upper) of the event-time range predicate."""
+    if a.isStreaming:
+        # Native ts + INTERVAL: the only form StreamingJoinHelper can invert
+        # into per-side state watermarks (A kept while ts >= wm - upper, B
+        # while ts >= wm + lower — the reference's watermark purge,
+        # wf/interval_join.hpp:109-117,153-159). With unix_micros the state
+        # grows without bound and outer joins fail analysis. On TIMESTAMP
+        # (LTZ) the addition follows the session time zone: under
+        # America/New_York, TIMESTAMP'2024-03-09 12:00:00' + INTERVAL
+        # 86400000000 MICROSECOND lands 23 h later by unix_micros, where the
+        # batch µs form (and the same addition on NTZ) lands 24 h later. So
+        # in a non-UTC session, bounds of a day or more differ from batch
+        # across a DST change; make_interval would be exact, but Spark
+        # rejects it as a stream-stream outer-join range condition.
+        # get_spark pins the session to UTC.
+        lo, hi = (F.expr(f"INTERVAL {us} MICROSECOND") for us in (lower_us, upper_us))
+        return F.col(f"a.{a_ts}"), F.col(f"b.{b_ts}"), lo, hi
+    # batch: exact epoch-µs arithmetic, independent of the session time zone
+    a_us = event_micros(a, a_ts, qualifier="a")
+    return a_us, event_micros(b, b_ts, qualifier="b"), F.lit(lower_us), F.lit(upper_us)
 
 
 def interval_join(
@@ -39,27 +97,8 @@ def interval_join(
     colliding columns. ``broadcast_side`` ∈ {None, 'a', 'b'} selects the
     reference's DP mode (broadcast) vs KP mode (shuffle).
     """
-    aa = a.alias("a")
-    bb = b.alias("b")
-    if broadcast_side == "a":
-        aa = F.broadcast(aa)
-    elif broadcast_side == "b":
-        bb = F.broadcast(bb)
-    key_eq = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
-    from windflow_spark.operators.timeutil import event_micros
-
-    a_us = event_micros(a, a_ts, qualifier="a")
-    b_us = event_micros(b, b_ts, qualifier="b")
-    cond = key_eq + [b_us >= a_us + F.lit(lower_us), b_us <= a_us + F.lit(upper_us)]
-    joined = aa.join(bb, F.lit(True) if not cond else _and_all(cond), how=how)
-    return joined
-
-
-def _and_all(conds):
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
+    band = _time_band(a, b, a_ts, b_ts, lower_us, upper_us)
+    return _band_join(a.alias("a"), b.alias("b"), key_cols, *band, how, broadcast_side)
 
 
 def interval_join_bucketed(
@@ -88,7 +127,9 @@ def interval_join_bucketed(
     exact range as a residual predicate. Every matching pair shares exactly
     one bucket (b's), so no duplicate pairs are produced and no post-join
     dedup is needed. Shuffle parallelism now scales with key × time rather
-    than key cardinality.
+    than key cardinality. In streaming, Spark partitions join STATE by the
+    equi-key, so the same layout spreads a hot key's retained rows over
+    key × time state partitions; the retention bound itself is unchanged.
 
     Outer joins (``how`` ∈ {'inner', 'left', 'right'}): the replicated side
     flips so the OUTER-PRESERVED side lands in exactly ONE bucket — with
@@ -114,46 +155,25 @@ def interval_join_bucketed(
     if width <= 0:
         raise ValueError(f"bucket_us must be positive, got {bucket_us}")
 
-    from windflow_spark.operators.timeutil import event_micros
+    def bucket(us: Column) -> Column:
+        return F.floor(us / F.lit(width))
+
+    def buckets(lo: Column, hi: Column) -> Column:
+        return F.explode(F.sequence(bucket(lo), bucket(hi)))
 
     a_us = event_micros(a, a_ts)
     b_us = event_micros(b, b_ts)
     if how == "left":
-        aa = a.withColumn("__ij_bkt", F.floor(a_us / F.lit(width))).alias("a")
-        bb = (
-            b.withColumn(
-                "__ij_bkt",
-                F.explode(
-                    F.sequence(
-                        F.floor((b_us - F.lit(upper_us)) / F.lit(width)),
-                        F.floor((b_us - F.lit(lower_us)) / F.lit(width)),
-                    )
-                ),
-            )
-        ).alias("b")
+        a_bkt = bucket(a_us)
+        b_bkt = buckets(b_us - F.lit(upper_us), b_us - F.lit(lower_us))
     else:
-        aa = (
-            a.withColumn(
-                "__ij_bkt",
-                F.explode(
-                    F.sequence(
-                        F.floor((a_us + F.lit(lower_us)) / F.lit(width)),
-                        F.floor((a_us + F.lit(upper_us)) / F.lit(width)),
-                    )
-                ),
-            )
-        ).alias("a")
-        bb = b.withColumn("__ij_bkt", F.floor(b_us / F.lit(width))).alias("b")
-
-    qa_us = event_micros(a, a_ts, qualifier="a")
-    qb_us = event_micros(b, b_ts, qualifier="b")
-    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
-    cond += [
-        F.col("a.__ij_bkt") == F.col("b.__ij_bkt"),
-        qb_us >= qa_us + F.lit(lower_us),
-        qb_us <= qa_us + F.lit(upper_us),
-    ]
-    joined = aa.join(bb, _and_all(cond), how=how)
+        a_bkt = buckets(a_us + F.lit(lower_us), a_us + F.lit(upper_us))
+        b_bkt = bucket(b_us)
+    aa = a.withColumn("__ij_bkt", a_bkt).alias("a")
+    bb = b.withColumn("__ij_bkt", b_bkt).alias("b")
+    band = _time_band(a, b, a_ts, b_ts, lower_us, upper_us)
+    # the bucket is one more equi-key, after the user's keys
+    joined = _band_join(aa, bb, [*key_cols, "__ij_bkt"], *band, how)
     return joined.drop(F.col("a.__ij_bkt")).drop(F.col("b.__ij_bkt"))
 
 
@@ -184,7 +204,9 @@ def interval_join_full_bucketed(
     Each branch replicates only its NON-preserved side, so every unmatched
     row null-emits exactly once and every matched pair appears exactly
     once. Cost: the inputs are scanned/joined twice — the price of
-    key×time state spread with both sides preserved.
+    key×time state spread with both sides preserved. In streaming each
+    branch is an independent stream-stream join with its own bounded
+    state, so the union doubles the join state.
 
     Because both sides survive with nulls, the result is a FLAT schema
     (qualified a./b. access can't outlive the union): coalesced key
@@ -212,15 +234,8 @@ def interval_join_full_bucketed(
         )
     )
     right = interval_join_bucketed(
-        a.withColumn(marker, F.lit(1)),
-        b,
-        keys,
-        a_ts,
-        b_ts,
-        lower_us,
-        upper_us,
-        bucket_us,
-        how="right",
+        a.withColumn(marker, F.lit(1)), b, keys, a_ts, b_ts,
+        lower_us, upper_us, bucket_us, how="right",
     )
     unmatched_b = _flat(right.filter(F.col(f"a.{marker}").isNull()))
     return matched_and_a.unionByName(unmatched_b)
@@ -244,13 +259,7 @@ def band_join(
     Same physical shape as interval_join: equi-join on keys with a residual
     band predicate, so Catalyst plans a hash join (shuffle or broadcast via
     ``broadcast_side``), never a cartesian product."""
-    aa = a.alias("a")
-    bb = b.alias("b")
-    if broadcast_side == "a":
-        aa = F.broadcast(aa)
-    elif broadcast_side == "b":
-        bb = F.broadcast(bb)
-    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    aa, bb = a.alias("a"), b.alias("b")
     av, bv = F.col(f"a.{a_val}"), F.col(f"b.{b_val}")
-    cond += [bv >= av + F.lit(lower), bv <= av + F.lit(upper)]
-    return aa.join(bb, _and_all(cond), how=how)
+    lo, hi = F.lit(lower), F.lit(upper)
+    return _band_join(aa, bb, key_cols, av, bv, lo, hi, how, broadcast_side)

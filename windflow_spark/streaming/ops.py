@@ -18,6 +18,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from windflow_spark.operators.interval_join import (
+    interval_join,
+    interval_join_bucketed,
+    interval_join_full_bucketed,
+)
+from windflow_spark.operators.timeutil import event_micros
 from windflow_spark.streaming.keyed import keyed_fold
 
 
@@ -81,21 +87,14 @@ def streaming_sliding_window_tb(
     empty hops emit nothing, matching the batch explode form exactly.
     """
     if slide_us > length_us:
-        from windflow_spark.operators.timeutil import event_micros
-
         us = event_micros(df, ts_col)
-        in_window = (us % F.lit(slide_us)) < F.lit(length_us)
-        return (
-            df.filter(in_window)
-            .withWatermark(ts_col, _dur(max(lateness_us, 1)))
-            .groupBy(*key_cols, F.window(ts_col, _dur(slide_us)))
-            .agg(*aggs)
-            .withColumn(window_col, F.col("window.start"))
-            .drop("window")
-        )
+        df = df.filter((us % F.lit(slide_us)) < F.lit(length_us))
+        win = F.window(ts_col, _dur(slide_us))
+    else:
+        win = F.window(ts_col, _dur(length_us), _dur(slide_us))
     return (
         df.withWatermark(ts_col, _dur(max(lateness_us, 1)))
-        .groupBy(*key_cols, F.window(ts_col, _dur(length_us), _dur(slide_us)))
+        .groupBy(*key_cols, win)
         .agg(*aggs)
         .withColumn(window_col, F.col("window.start"))
         .drop("window")
@@ -122,6 +121,15 @@ def streaming_session_window(
     )
 
 
+def _watermarked(
+    a: DataFrame, b: DataFrame, a_ts: str, b_ts: str, watermark_us: int
+) -> tuple[DataFrame, DataFrame]:
+    return (
+        a.withWatermark(a_ts, _dur(watermark_us)),
+        b.withWatermark(b_ts, _dur(watermark_us)),
+    )
+
+
 def streaming_interval_join(
     a: DataFrame,
     b: DataFrame,
@@ -133,10 +141,10 @@ def streaming_interval_join(
     watermark_us: int = 1,
     how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream interval join. Spark derives state retention from the
-    time-bound condition exactly as the reference purges archives by
-    watermark (A kept while ts >= wm − upper, B while ts >= wm + lower;
-    reference wf/interval_join.hpp:109-117,153-159).
+    """Stream-stream interval join: both inputs watermarked, then
+    operators.interval_join.interval_join, whose range condition Spark
+    inverts into state retention the way the reference purges archives by
+    watermark (wf/interval_join.hpp:109-117,153-159).
 
     ``how`` ∈ {'inner', 'left', 'right', 'full'}: outer forms null-emit
     the unmatched preserved-side row once its buffered state expires past
@@ -148,28 +156,16 @@ def streaming_interval_join(
     possible here (unlike the bucketed form, which must decompose) because
     neither side is replicated.
 
-    The range condition is native timestamp+INTERVAL arithmetic, NOT
-    unix_micros: StreamingJoinHelper can only derive the per-side state
-    watermark (→ bounded join state, and outer null-emission at all) from
-    conditions it can invert over the event-time column — wrapping ts in
-    unix_micros made state retention UNBOUNDED for inner joins and a hard
-    analysis error for outer ones."""
+    The streaming range condition is native timestamp+INTERVAL arithmetic
+    (the only form Spark can turn into per-side state watermarks), which
+    follows the session time zone on TIMESTAMP columns: in a non-UTC
+    session with DST (e.g. America/New_York) a bound of 1 day or more spans
+    23 or 25 h across a DST change, where the batch form adds exact µs.
+    ``get_spark`` pins the session to UTC, so its sessions match batch."""
     if how not in ("inner", "left", "right", "full"):
         raise ValueError(f"how must be inner|left|right|full, got {how!r}")
-    aa = a.withWatermark(a_ts, _dur(watermark_us)).alias("a")
-    bb = b.withWatermark(b_ts, _dur(watermark_us)).alias("b")
-    cond = None
-    for k in key_cols:
-        c = F.col(f"a.{k}") == F.col(f"b.{k}")
-        cond = c if cond is None else (cond & c)
-    bt = F.col(f"b.{b_ts}")
-    at = F.col(f"a.{a_ts}")
-    cond = (
-        cond
-        & (bt >= at + F.expr(f"INTERVAL {lower_us} MICROSECOND"))
-        & (bt <= at + F.expr(f"INTERVAL {upper_us} MICROSECOND"))
-    )
-    return aa.join(bb, cond, how)
+    aw, bw = _watermarked(a, b, a_ts, b_ts, watermark_us)
+    return interval_join(aw, bw, key_cols, a_ts, b_ts, lower_us, upper_us, how=how)
 
 
 def streaming_interval_join_bucketed(
@@ -184,100 +180,18 @@ def streaming_interval_join_bucketed(
     watermark_us: int = 1,
     how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream interval join blocked by time bucket — the streaming
-    sibling of operators.interval_join.interval_join_bucketed (r5 VERDICT
-    #4). Identical match semantics (ts(b) ∈ [ts(a)+lower, ts(a)+upper],
-    bounds inclusive; reference wf/interval_join.hpp:279-295), but the
-    equi-join key is (key, bucket): B rows land in exactly one
-    floor(ts/W) bucket, A rows replicate to the ≤2 buckets their match
-    interval covers (W defaults to upper−lower), and every matching pair
-    shares exactly one bucket — b's — so no duplicate pairs arise.
-
-    ``how`` ∈ {'inner', 'left', 'right'} (r6 VERDICT #5): for outer joins
-    the replicated side FLIPS so the outer-preserved side lands in exactly
-    one bucket — otherwise each unmatched preserved row would null-emit
-    once per replica. how='left': A takes floor(ts_a/W), B explodes to
-    [floor((ts_b−upper)/W), floor((ts_b−lower)/W)]; pairs share a's bucket.
-    how='right' mirrors the inner layout with a right join. Null emission
-    happens when the preserved row's state expires past the watermark, so
-    watermark_us bounds the unmatched-detection latency.
-
-    Why it matters in streaming: Spark partitions JOIN STATE by the
-    equi-key. With key alone, one hot key concentrates its entire
-    retention window of buffered rows on a single state partition; on
-    (key, bucket) the state spreads over key × time. The per-row state
-    RETENTION bound is unchanged — Spark still derives it from the
-    event-time range condition exactly as the reference purges archives by
-    watermark (A kept while ts ≥ wm − upper, B while ts ≥ wm + lower;
-    wf/interval_join.hpp:109-117,153-159); bucketing changes only where
-    that bounded state lives. A replicas double the A-side state, the
-    price of the key×time spread (same trade as the batch form).
-    """
+    """Stream-stream interval join blocked by time bucket: both inputs
+    watermarked, then operators.interval_join.interval_join_bucketed (same
+    (key, bucket) layout and ``how`` ∈ {'inner', 'left', 'right'} flip).
+    Spark partitions join state by the equi-key, so the state of a hot key
+    spreads over key × time; null emission happens when the preserved row's
+    state expires past the watermark, so watermark_us bounds the
+    unmatched-detection latency."""
     if how not in ("inner", "left", "right"):
         raise ValueError(f"how must be inner|left|right, got {how!r}")
-    span = upper_us - lower_us
-    if span < 0:
-        raise ValueError(f"upper_us < lower_us ({upper_us} < {lower_us})")
-    width = int(bucket_us) if bucket_us else max(span, 1)
-    if width <= 0:
-        raise ValueError(f"bucket_us must be positive, got {bucket_us}")
-    from windflow_spark.operators.timeutil import event_micros
-
-    a_us = event_micros(a, a_ts)
-    b_us = event_micros(b, b_ts)
-    if how == "left":
-        aa = (
-            a.withWatermark(a_ts, _dur(watermark_us))
-            .withColumn("__ij_bkt", F.floor(a_us / F.lit(width)))
-            .alias("a")
-        )
-        bb = (
-            b.withWatermark(b_ts, _dur(watermark_us))
-            .withColumn(
-                "__ij_bkt",
-                F.explode(
-                    F.sequence(
-                        F.floor((b_us - F.lit(upper_us)) / F.lit(width)),
-                        F.floor((b_us - F.lit(lower_us)) / F.lit(width)),
-                    )
-                ),
-            )
-            .alias("b")
-        )
-    else:
-        aa = (
-            a.withWatermark(a_ts, _dur(watermark_us))
-            .withColumn(
-                "__ij_bkt",
-                F.explode(
-                    F.sequence(
-                        F.floor((a_us + F.lit(lower_us)) / F.lit(width)),
-                        F.floor((a_us + F.lit(upper_us)) / F.lit(width)),
-                    )
-                ),
-            )
-            .alias("a")
-        )
-        bb = (
-            b.withWatermark(b_ts, _dur(watermark_us))
-            .withColumn("__ij_bkt", F.floor(b_us / F.lit(width)))
-            .alias("b")
-        )
-    cond = F.col("a.__ij_bkt") == F.col("b.__ij_bkt")
-    for k in key_cols:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    # native timestamp+INTERVAL range condition (not unix_micros): the only
-    # form StreamingJoinHelper can invert to a per-side state watermark —
-    # bounded state for inner, and the precondition for outer null-emission
-    bt = F.col(f"b.{b_ts}")
-    at = F.col(f"a.{a_ts}")
-    cond = (
-        cond
-        & (bt >= at + F.expr(f"INTERVAL {lower_us} MICROSECOND"))
-        & (bt <= at + F.expr(f"INTERVAL {upper_us} MICROSECOND"))
-    )
-    return aa.join(bb, cond, how).drop(F.col("a.__ij_bkt")).drop(
-        F.col("b.__ij_bkt")
+    aw, bw = _watermarked(a, b, a_ts, b_ts, watermark_us)
+    return interval_join_bucketed(
+        aw, bw, key_cols, a_ts, b_ts, lower_us, upper_us, bucket_us, how
     )
 
 
@@ -294,56 +208,15 @@ def streaming_interval_join_full_bucketed(
     a_prefix: str = "a_",
     b_prefix: str = "b_",
 ) -> DataFrame:
-    """FULL-outer bucketed stream-stream interval join — the streaming
-    sibling of operators.interval_join.interval_join_full_bucketed
-    (completes the §2.6 streaming how-matrix, r7 VERDICT #4; reference
-    match semantics wf/interval_join.hpp:279-295, both sides preserved).
-
-    Same union-of-two-outer decomposition as the batch form: a single
-    bucketed join cannot be full-outer because the replicated side would
-    null-emit each unmatched row once per replica. Branch 1 is the
-    LEFT-layout left join (every matched pair exactly once, plus
-    unmatched-A nulls when A state expires past the watermark); branch 2
-    is the RIGHT-layout right join reduced to its unmatched-B rows via a
-    non-null marker on the a side. Each branch is an independent
-    stream-stream join with its OWN bounded state (Spark derives both
-    retention bounds from the native timestamp+INTERVAL range condition);
-    the union doubles state versus one join — the cost of key×time state
-    spread with both sides preserved. Null-emission latency on both sides
-    is bounded by ``watermark_us`` exactly as in the single-sided outer
-    forms.
-
-    Flat output schema (qualified a./b. access can't outlive a union):
-    coalesced keys under their original names, a's non-key columns
-    prefixed ``a_prefix``, b's prefixed ``b_prefix``.
-    """
-    keys = list(key_cols)
-    a_payload = [c for c in a.columns if c not in keys]
-    b_payload = [c for c in b.columns if c not in keys]
-    marker = "__ijf_a_present"
-
-    def _flat(joined: DataFrame) -> DataFrame:
-        return joined.select(
-            *[
-                F.coalesce(F.col(f"a.{k}"), F.col(f"b.{k}")).alias(k)
-                for k in keys
-            ],
-            *[F.col(f"a.{c}").alias(f"{a_prefix}{c}") for c in a_payload],
-            *[F.col(f"b.{c}").alias(f"{b_prefix}{c}") for c in b_payload],
-        )
-
-    matched_and_a = _flat(
-        streaming_interval_join_bucketed(
-            a, b, keys, a_ts, b_ts, lower_us, upper_us, bucket_us,
-            watermark_us, how="left",
-        )
+    """FULL-outer bucketed stream-stream interval join: both inputs
+    watermarked, then operators.interval_join.interval_join_full_bucketed
+    (union of two outer joins, flat output schema). Null-emission latency
+    on both sides is bounded by ``watermark_us``."""
+    aw, bw = _watermarked(a, b, a_ts, b_ts, watermark_us)
+    return interval_join_full_bucketed(
+        aw, bw, key_cols, a_ts, b_ts, lower_us, upper_us, bucket_us,
+        a_prefix, b_prefix,
     )
-    right = streaming_interval_join_bucketed(
-        a.withColumn(marker, F.lit(1)), b, keys, a_ts, b_ts,
-        lower_us, upper_us, bucket_us, watermark_us, how="right",
-    )
-    unmatched_b = _flat(right.filter(F.col(f"a.{marker}").isNull()))
-    return matched_and_a.unionByName(unmatched_b)
 
 
 def streaming_rolling_reduce(
@@ -1638,6 +1511,45 @@ def _asof_buffer(st, rows: pd.DataFrame):
     return (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done
 
 
+_ASOF_OUT = "k long, a_id long, a_us long, b_id long, b_val double"
+_ASOF_STATE = (
+    "a_ids array<long>, a_us array<long>, b_ids array<long>, "
+    "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
+)
+
+
+def _asof_side(df, key_col, us_col, id_col, side, val_col, eos_col) -> DataFrame:
+    """One as-of input in the side-tagged layout ``_asof_buffer`` reads."""
+    val = F.col(val_col).cast("double") if val_col else F.lit(None).cast("double")
+    return df.select(
+        F.col(key_col).alias("k"),
+        F.col(us_col).cast("long").alias("us"),
+        F.lit(side).alias("side"),
+        F.col(id_col).cast("long").alias("id"),
+        val.alias("val"),
+        F.col(eos_col).cast("boolean").alias("eos"),
+    )
+
+
+def _asof_match(key, a_rows, b_ids, b_uss, b_vals, lookback_us=None) -> list:
+    """Match each (a_id, a_us) with the key's latest b row at or before it
+    (and within ``lookback_us`` when given); unmatched rows get null b
+    columns. b is sorted once by (us, id, val) so "last at-or-before" lands
+    on the greatest payload among equal timestamps — the batch form's struct
+    tie-break."""
+    order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
+    s_us = [b_uss[i] for i in order]
+    out = []
+    for aid, aus in a_rows:
+        j = bisect.bisect_right(s_us, aus) - 1
+        if j >= 0 and (lookback_us is None or s_us[j] >= aus - lookback_us):
+            i = order[j]
+            out.append((key[0], aid, aus, b_ids[i], b_vals[i]))
+        else:
+            out.append((key[0], aid, aus, None, None))
+    return out
+
+
 def streaming_asof_join_backward(
     a: DataFrame,
     b: DataFrame,
@@ -1672,50 +1584,17 @@ def streaming_asof_join_backward(
     Output (append, on flush): key, a_id, a_us, b_id, b_val — unmatched
     a rows keep null b columns, like how='left' in the batch form.
     """
-    a_side = a.select(
-        F.col(key_col).alias("k"),
-        F.col(a_us_col).cast("long").alias("us"),
-        F.lit(0).alias("side"),
-        F.col(a_id_col).cast("long").alias("id"),
-        F.lit(None).cast("double").alias("val"),
-        F.col(eos_col).cast("boolean").alias("eos"),
-    )
-    b_side = b.select(
-        F.col(key_col).alias("k"),
-        F.col(b_us_col).cast("long").alias("us"),
-        F.lit(1).alias("side"),
-        F.col(b_id_col).cast("long").alias("id"),
-        F.col(b_val_col).cast("double").alias("val"),
-        F.col(eos_col).cast("boolean").alias("eos"),
-    )
-    u = a_side.unionByName(b_side)
-
-    out_schema = "k long, a_id long, a_us long, b_id long, b_val double"
-    state_schema = (
-        "a_ids array<long>, a_us array<long>, b_ids array<long>, "
-        "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
+    u = _asof_side(a, key_col, a_us_col, a_id_col, 0, None, eos_col).unionByName(
+        _asof_side(b, key_col, b_us_col, b_id_col, 1, b_val_col, eos_col)
     )
 
     def step(key, st, rows, eos):
         (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done = _asof_buffer(st, rows)
         if not (a_done and b_done):
             return [], (a_ids, a_uss, b_ids, b_uss, b_vals, a_done, b_done)
-        # flush: sort b once by (us, id, val) so "last at-or-before" lands on
-        # the greatest payload among equal timestamps — the batch form's
-        # struct tie-break
-        order = sorted(range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i]))
-        s_us = [b_uss[i] for i in order]
-        out = []
-        for aid, aus in zip(a_ids, a_uss):
-            j = bisect.bisect_right(s_us, aus) - 1
-            if j >= 0:
-                i = order[j]
-                out.append((key[0], aid, aus, b_ids[i], b_vals[i]))
-            else:
-                out.append((key[0], aid, aus, None, None))
-        return out, None
+        return _asof_match(key, zip(a_ids, a_uss), b_ids, b_uss, b_vals), None
 
-    return keyed_fold(u, ["k"], step, out_schema, state_schema, _ASOF_EMPTY)
+    return keyed_fold(u, ["k"], step, _ASOF_OUT, _ASOF_STATE, _ASOF_EMPTY)
 
 
 def streaming_asof_join_backward_bounded(
@@ -1760,33 +1639,18 @@ def streaming_asof_join_backward_bounded(
     """
 
     def _side(df, us_col, id_col, side, val_col=None):
-        sel = df.select(
-            F.col(key_col).alias("k"),
-            F.col(us_col).cast("long").alias("us"),
-            F.lit(side).alias("side"),
-            F.col(id_col).cast("long").alias("id"),
-            (
-                F.col(val_col).cast("double") if val_col else F.lit(None).cast("double")
-            ).alias("val"),
-            F.col(eos_col).cast("boolean").alias("eos"),
-            F.timestamp_micros(F.col(us_col).cast("long")).alias("_ts"),
-        )
+        sel = _asof_side(df, key_col, us_col, id_col, side, val_col, eos_col)
         # per-side watermark BEFORE the union → operator watermark is the
         # min across sides, so a lagging side holds finalization back
-        return sel.withWatermark("_ts", f"{max(watermark_us, 0)} microsecond")
+        return sel.withColumn("_ts", F.timestamp_micros("us")).withWatermark(
+            "_ts", f"{max(watermark_us, 0)} microsecond"
+        )
 
     # the watermark-annotated _ts column must REACH the stateful operator
     # (dropping it un-sets the watermark for the keyed-state fold)
     u = _side(a, a_us_col, a_id_col, 0).unionByName(
         _side(b, b_us_col, b_id_col, 1, b_val_col)
     )
-
-    out_schema = "k long, a_id long, a_us long, b_id long, b_val double"
-    state_schema = (
-        "a_ids array<long>, a_us array<long>, b_ids array<long>, "
-        "b_us array<long>, b_vals array<double>, a_done boolean, b_done boolean"
-    )
-    cols = ["k", "a_id", "a_us", "b_id", "b_val"]
 
     def step(key, st, rows, eos, wm_us):
         (a_ids, a_uss, b_ids, b_uss, b_vals), a_done, b_done = _asof_buffer(st, rows)
@@ -1796,18 +1660,8 @@ def streaming_asof_join_backward_bounded(
         ready = [i for i, aus in enumerate(a_uss) if flush_all or aus < wm_us]
         out = []
         if ready:
-            order = sorted(
-                range(len(b_ids)), key=lambda i: (b_uss[i], b_ids[i], b_vals[i])
-            )
-            s_us = [b_uss[i] for i in order]
-            for i in ready:
-                aid, aus = a_ids[i], a_uss[i]
-                j = bisect.bisect_right(s_us, aus) - 1
-                if j >= 0 and s_us[j] >= aus - lookback_us:
-                    bi = order[j]
-                    out.append((key[0], aid, aus, b_ids[bi], b_vals[bi]))
-                else:
-                    out.append((key[0], aid, aus, None, None))
+            finals = [(a_ids[i], a_uss[i]) for i in ready]
+            out = _asof_match(key, finals, b_ids, b_uss, b_vals, lookback_us)
         if flush_all:
             return out, None
         ready_set = set(ready)
@@ -1826,7 +1680,7 @@ def streaming_asof_join_backward_bounded(
         )
 
     return keyed_fold(
-        u, ["k"], step, out_schema, state_schema, _ASOF_EMPTY, watermark=True
+        u, ["k"], step, _ASOF_OUT, _ASOF_STATE, _ASOF_EMPTY, watermark=True
     )
 
 
