@@ -137,9 +137,6 @@ _BNLJ_ALLOWED = {
     # one-row H-statistic frame crossJoined onto the 5-row group rank
     # sums, plus the 1x1 totals x ties join (the anova shape) (r9)
     "kruskal_wallis_qty_priority",
-    # cardinality-bounded contingency cell-pair join (<=550x550 broadcast,
-    # independent of row count) + one-row stat attaches (r9)
-    "kendall_tau_qty_discount",
     # one-row (tp_all, fp_all) totals crossJoined onto the 11-threshold
     # frame (r9)
     "roc_curve_discount_return",

@@ -43,3 +43,39 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns[0] == "l_returnflag"
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, 0.0), (2, 0.04), (2, 0.04), (5, 0.1), (5, 0.0), (1, 0.1), (3, 0.04)],
+        [(3, 0.02), (3, 0.05)],
+        [],
+    ],
+    ids=["ties", "one_quantity", "empty"],
+)
+def test_kendall_fold_matches_oracle_on_edge_inputs(spark, tmp_path, rows):
+    # kendall_tau_qty_discount folds its cell table in the driver; the
+    # oracle's SQL sums over no rows are NULL (no pair of distinct
+    # quantities, or no rows at all), and the fold must say the same
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "l_quantity": pa.array([float(q) for q, _ in rows], pa.float64()),
+                "l_discount": pa.array([d for _, d in rows], pa.float64()),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'lineitem.parquet'}')"
+    )
+    name = "kendall_tau_qty_discount"
+    sdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+    problems = compare(name, sdf, con.execute(ORACLES[name]).df())
+    assert not problems, problems

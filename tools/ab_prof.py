@@ -5,6 +5,16 @@ windflow_spark/queries.py from a git ref alongside the working-tree AFTER
 variant, and times them alternately (A B A B ...) inside ONE warm session.
 Min and per-pair ratios are then drift-free to first order.
 
+Only queries.py is loaded from the ref; every other module (operators,
+streaming, functions, session) comes from the working tree for both
+sides. So the tool refuses to run (exit 2, listing the files) when any
+other file under windflow_spark/ differs from the ref: an A/B of that
+change would time the same code twice. Session-level changes need
+cross-process interleaved runs instead (A B A B ... processes, each
+building its own session), because some settings are read once per
+process — e.g. spark.python.sql.dataFrameDebugging.enabled, which PySpark
+caches at the first Column call.
+
 Usage: python tools/ab_prof.py [--ref HEAD] [--repeats 5] q1 q2 ...
 Honors $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -20,6 +30,21 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def check_ref_scope(ref: str) -> None:
+    changed = subprocess.check_output(
+        ["git", "diff", "--name-only", ref, "--",
+         "windflow_spark", ":!windflow_spark/queries.py"],
+        cwd=REPO, text=True,
+    ).split()
+    if changed:
+        print(
+            f"files outside queries.py differ from {ref}; both sides would "
+            "run the working-tree copy:\n  " + "\n  ".join(changed),
+            file=sys.stderr,
+        )
+        sys.exit(2)
 
 
 def load_ref_queries(ref: str):
@@ -45,6 +70,7 @@ def main() -> None:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
     args = ap.parse_args()
+    check_ref_scope(args.ref)
 
     from bench import run_once, warm_session
     from windflow_spark import get_spark

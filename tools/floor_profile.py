@@ -3,13 +3,16 @@ spent by SUB-SECOND bench queries actually go?
 
 For each named query it measures, in a bench-identical warm session:
   construct_s   Python-side DataFrame construction (fn call)
+  py4j_calls    py4j round trips that construction made (memory commands
+                left out, as in tests/test_construct_round_trips.py)
   exec_s        the noop-sink action (min of N repeats)
   n_jobs        Spark jobs the action submitted (AQE runs one job per
                 materialized query stage)
   n_stages      total stages across those jobs
   n_tasks       total tasks across those jobs
 and prints a per-query line plus two floor baselines:
-  job_floor_s   min wall time of an empty 1-task job (spark.range(1).count())
+  job_floor_s   min wall time of a 1-task JVM-only job (a noop write of
+                spark.range(0, 1, 1, 1); no Python worker)
   noop_floor_s  min wall time of a trivial 32-task noop write
 
 Reading: if exec_s ~= n_jobs * job_floor_s while n_tasks * per-task work is
@@ -49,7 +52,7 @@ def main() -> None:
     from bench import warm_session
     from windflow_spark import get_spark
     from windflow_spark import queries as Q
-    from windflow_spark.util import release_cache
+    from windflow_spark.util import count_py4j_calls, release_cache
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("floor-profile", extra_conf=extra or None)
@@ -65,18 +68,10 @@ def main() -> None:
     warm_session(spark, args.sf_dir)
 
     # floor baselines (min of 10)
-    job_floor = min(
-        _timed(lambda: sc.range(1).count()) for _ in range(10)
-    )
-    noop_floor = min(
-        _timed(
-            lambda: spark.range(0, 32, 1, 32)
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        for _ in range(10)
-    )
+    job_floor = min(_timed(lambda: _noop_write(spark.range(0, 1, 1, 1)))
+                    for _ in range(10))
+    noop_floor = min(_timed(lambda: _noop_write(spark.range(0, 32, 1, 32)))
+                     for _ in range(10))
     st = sc.statusTracker()
     out = {"job_floor_s": round(job_floor, 4), "noop_floor_s": round(noop_floor, 4)}
     rows = []
@@ -87,10 +82,10 @@ def main() -> None:
             group = f"{name}#{r}"
             release_cache(spark)
             t0 = time.time()
-            df = fn(spark, args.sf_dir)
+            df, calls = count_py4j_calls(spark, lambda: fn(spark, args.sf_dir))
             t1 = time.time()
             sc.setJobGroup(group, name)
-            df.write.mode("overwrite").format("noop").save()
+            _noop_write(df)
             t2 = time.time()
             jobs = st.getJobIdsForGroup(group)
             n_stages = 0
@@ -107,6 +102,7 @@ def main() -> None:
             rec = {
                 "query": name,
                 "construct_s": round(t1 - t0, 4),
+                "py4j_calls": calls,
                 "exec_s": round(t2 - t1, 4),
                 "n_jobs": len(jobs),
                 "n_stages": n_stages,
@@ -118,6 +114,10 @@ def main() -> None:
         print(json.dumps(best))
     out["queries"] = rows
     print(json.dumps(out))
+
+
+def _noop_write(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
 
 
 def _timed(f) -> float:

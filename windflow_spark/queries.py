@@ -16658,6 +16658,12 @@ def overlap_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Cap on the collected (quantity, discount) cell table: the two domains
+# give <=550 cells, so more means the input broke the low-cardinality
+# assumption the driver-side fold relies on.
+_KENDALL_CELL_CAP = 4096
+
+
 @register(
     "kendall_tau_qty_discount",
     """
@@ -16689,13 +16695,14 @@ def kendall_tau_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b rank correlation between quantity and discount —
     EXACT at any scale via contingency-cell pair counting: both columns
     are low-cardinality (50 x 11 values), so concordant/discordant pairs
-    are BIGINT sums over cell-pair products (cells_a join cells_b on
-    x_b > x_a counts every unordered pair once), never a row-pair join.
-    One scan builds the <=550-row cell table; the pair join is 550x550
-    broadcast work independent of corpus size — the same
-    cardinality-bounded discipline as auc_discount_predicts_return's
-    rank sums. tau_b divides by the tie-corrected pair counts in one
-    final double op."""
+    are sums over cell-pair products, never a row-pair join. One scan
+    builds the <=550-row cell table, which is collected (bounded by the
+    two domains, like the embedding_pca_power_iteration matrix) and
+    folded in the driver with Python ints: per-x prefix sums over the y
+    values give the concordant/discordant counts, and Σ g(g-1)/2 over
+    the tied x (y) groups gives n1 (n2). tau_b divides by the
+    tie-corrected pair counts in one final double op in Spark, over a
+    one-row frame built in the JVM."""
     li = _t(spark, sf_dir, "lineitem")
     cells = (
         li.select(
@@ -16704,54 +16711,46 @@ def kendall_tau_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .collect()
     )
-    # the <=550-row cell table feeds FOUR consumers (pair join both sides,
-    # tie terms, total): cut lineage once so the corpus scan happens once,
-    # not per branch (the k_core_fixed_point localCheckpoint move) —
-    # 10.9 s -> ~1 s at sf0.01
-    cells = cells.coalesce(1).localCheckpoint()
-    a, b = cells.alias("a"), cells.alias("b")
-    pairs = (
-        a.join(F.broadcast(b), F.col("b.x") > F.col("a.x"))
-        .agg(
-            F.sum(
-                F.when(F.col("b.y") > F.col("a.y"), F.col("a.c") * F.col("b.c"))
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("nc"),
-            F.sum(
-                F.when(F.col("b.y") < F.col("a.y"), F.col("a.c") * F.col("b.c"))
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("nd"),
+    if len(cells) > _KENDALL_CELL_CAP:
+        raise ValueError(
+            f"kendall_tau_qty_discount: {len(cells)} (quantity, discount) "
+            f"cells exceed the {_KENDALL_CELL_CAP}-cell cap; the exact "
+            "driver-side fold needs low-cardinality columns"
         )
-    )
-    # tie-pair terms in ONE pass over the cell frame: within a tied group
-    # of size g the pair count is g(g-1)/2, and Σ_x gx² = Σ_cells c·gx,
-    # so n1 = (Σ c·gx − n)/2 with gx attached by a window — no extra
-    # grouping branches
-    gx = F.sum("c").over(W.partitionBy("x"))
-    gy = F.sum("c").over(W.partitionBy("y"))
-    stats = (
-        cells.select("c", gx.alias("gx"), gy.alias("gy"))
-        .agg(
-            F.sum("c").cast("long").alias("n"),
-            F.sum(F.col("c") * F.col("gx")).cast("long").alias("cgx"),
-            F.sum(F.col("c") * F.col("gy")).cast("long").alias("cgy"),
-        )
-    )
-    # integer floor division — (cgx − n)/2 via double loses exactness once
-    # cgx ≈ Σgx² exceeds 2^53 (reachable at 100TB-class row counts)
-    tx = stats.select(F.expr("(cgx - n) div 2").alias("n1"))
-    ty = stats.select(F.expr("(cgy - n) div 2").alias("n2"))
-    tot = stats.select("n")
+    by_x: dict[int, dict[int, int]] = {}
+    for x, y, c in cells:
+        by_x.setdefault(x, {})[y] = c
+    ys = sorted({y for _, y, _ in cells})
+    below = {y: 0 for y in ys}  # count of cells with a smaller x, per y
+    nc = nd = n = n1 = 0
+    for x in sorted(by_x):
+        row = by_x[x]
+        lo, hi = 0, n  # cells with smaller x and smaller / larger y
+        for y in ys:
+            hi -= below[y]
+            c = row.get(y, 0)
+            nc += c * lo
+            nd += c * hi
+            lo += below[y]
+        for y, c in row.items():
+            below[y] += c
+        g = sum(row.values())
+        n += g
+        n1 += g * (g - 1) // 2
+    n2 = sum(g * (g - 1) // 2 for g in below.values())
+    stats = {"n": n, "nc": nc, "nd": nd, "n1": n1, "n2": n2}
+    # a SQL sum over no rows is NULL: the pair sums when fewer than two
+    # x values exist, every sum when the input is empty
+    if len(by_x) < 2:
+        stats.update(nc=None, nd=None)
+    if not cells:
+        stats = dict.fromkeys(stats)
     n0 = F.col("n").cast("double") * (F.col("n") - 1) / 2
     return (
-        tot.crossJoin(F.broadcast(pairs))
-        .crossJoin(F.broadcast(tx))
-        .crossJoin(F.broadcast(ty))
+        spark.range(1)
+        .select(*(F.lit(v).cast("long").alias(k) for k, v in stats.items()))
         .select(
             "n",
             "nc",

@@ -5,6 +5,20 @@ multi-executor cluster: AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), Arrow for the few Pandas-UDF paths, sensible
 broadcast threshold so dimension tables (region/nation/supplier/part at
 TPC-H-ish scale) broadcast instead of shuffling the fact table.
+
+Python call-site capture is off (``spark.python.sql.dataFrameDebugging.
+enabled=false``). PySpark 4.1 otherwise wraps every ``F.*`` function and
+``Column`` operator to record the caller's ``file:line`` for error
+messages, at about five py4j round trips per call: building nine
+sub-second registry queries at sf0.1 took 2,114 round trips with it and
+824 without (``filter_events`` 77 -> 27, ``interval_join_bucketed``
+507 -> 147; SCALE.md has the table).
+Plans and results do not change; the one visible effect is that ANSI
+runtime errors no longer name the Python ``file:line`` in their
+DataFrame context. To get it back, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+PySpark reads the flag at the process's first ``F.*`` or ``Column`` call
+and caches it, so it must be set when the session is built.
 """
 
 from __future__ import annotations
@@ -43,6 +57,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # no per-Column call-site round trips (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -87,3 +87,26 @@ def release_cache(spark) -> int:
     for rdd_id in ids:
         rdds.get(rdd_id).unpersist(True)
     return len(ids)
+
+
+def count_py4j_calls(spark, fn):
+    """Call ``fn()``; return ``(result, n)``, where n is the number of py4j
+    commands it sent to the JVM. Memory commands (``m\\n…``, the release of
+    a garbage-collected Java proxy) are left out: they follow Python's
+    garbage collector, not the code under test."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal n
+        if not command.startswith("m\n"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        result = fn()
+    finally:
+        client.send_command = send
+    return result, n
