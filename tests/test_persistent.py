@@ -163,38 +163,3 @@ def test_p_reduce_vector_fold_matches_per_row(spark, pstream):
     a = sorted((r.key, r.ts, r.mx, r.cnt) for r in spark.table(n1).collect())
     b = sorted((r.key, r.ts, r.mx, r.cnt) for r in spark.table(n2).collect())
     assert a == b and len(a) == 30
-
-
-def test_p_reduce_tws_matches_classic(spark, pstream):
-    batch, mk_stream = pstream
-    # transformWithStateInPandas speaks protobuf to its driver worker;
-    # without google.protobuf the Python runner cannot start at all
-    pytest.importorskip("google.protobuf.descriptor")
-    from windflow_spark.streaming.persistent import p_reduce_tws
-
-    for k, v in rocksdb_state_conf().items():
-        spark.conf.set(k, v)
-    try:
-        def fold(row, st):
-            st[0] = max(st[0], row["value"])
-            st[1] += 1
-
-        out = p_reduce_tws(
-            mk_stream(), ["key"], "ts", fold,
-            "key long, ts timestamp, mx long, cnt long", "mx long, cnt long", (0, 0),
-        )
-        name, _ = to_memory_sink(out, output_mode="append")
-        got = sorted((r.key, r.mx, r.cnt) for r in spark.table(name).collect())
-        from pyspark.sql import Window as W
-        w = W.partitionBy("key").orderBy("ts")
-        expect = sorted(
-            (r.key, r.mx, r.cnt)
-            for r in batch.select(
-                "key",
-                F.max("value").over(w).alias("mx"),
-                F.count(F.lit(1)).over(w).alias("cnt"),
-            ).collect()
-        )
-        assert got == expect and len(got) == 30
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -686,6 +686,7 @@ def test_stream_monitor_collects_progress(spark, stream_fixture):
     import time
 
     from windflow_spark.streaming import monitor_streams, streaming_tumbling_window_tb
+    from windflow_spark.streaming.monitor import PHASES
 
     _, stream = stream_fixture
     raw = []
@@ -709,6 +710,9 @@ def test_stream_monitor_collects_progress(spark, stream_fixture):
         assert s["batches"] >= 1
         assert s["total_input_rows"] == 60  # the fixture's row count
         assert s["state_rows"] > 0  # windowed agg keeps state
+        # the per-batch durationMs breakdown and the state commit time
+        for key in (*PHASES, "state_commit_ms_p50"):
+            assert s[key] is not None and s[key] >= 0, key
         assert raw and isinstance(raw[0], dict)  # sink got raw progress dicts
         assert mon.history(list(stats)[0])
     finally:
@@ -2231,6 +2235,7 @@ def test_monitor_report_renders_html(spark, stream_fixture, tmp_path):
     # path 2: from the durable jsonl the sink wrote
     html2 = render_from_jsonl(jl)
     assert "<table>" in html2 and "60" in html2
+    assert "walCommit" in html2 and "state commit ms p50" in html2
     out_path = tmp_path / "report.html"
     out_path.write_text(html2)
     assert out_path.stat().st_size > 500

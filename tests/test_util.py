@@ -57,3 +57,41 @@ def test_bench_payload_schema():
     import json
 
     json.dumps(p)  # must be JSON-serializable as one line
+
+
+def _jobs_run_by(spark, fn):
+    """Number of Spark jobs ``fn()`` ran, read from a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_release_cache_drops_memoized_codebooks(spark):
+    """A timed run must not reuse a codebook trained by the run before it:
+    after ``release_cache`` the same ``cache_key`` trains again."""
+    from windflow_spark.functions.similarity import train_codebook, train_pq_codebooks
+    from windflow_spark.util import release_cache
+
+    corpus = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5) for d in range(8)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    key = ("test-release-cache",)
+    trainers = [
+        lambda: train_codebook(corpus, key, n_lists=3),
+        lambda: train_pq_codebooks(corpus, key, m=2, n_centroids=2, dim=8),
+    ]
+    for train in trainers:
+        release_cache(spark)
+        assert _jobs_run_by(spark, train) > 0  # trains
+        assert _jobs_run_by(spark, train) == 0  # memo hit
+        release_cache(spark)
+        assert _jobs_run_by(spark, train) > 0  # trains again
+    release_cache(spark)

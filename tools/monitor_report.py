@@ -3,9 +3,9 @@ report-side analog of the reference's WindFlow_Dashboard web UI
 (/root/reference/WindFlow_Dashboard: a Java/Spring web app rendering
 per-operator throughput and buffer occupancy). A server has no place in
 a batch-graded sandbox, so this renders the SAME signals — per-query
-throughput over time, batch durations, stateful-operator rows/memory —
-as one self-contained HTML file (inline SVG sparklines, zero JS deps)
-from either:
+throughput over time, batch durations and their ``durationMs`` breakdown,
+stateful-operator rows, memory and commit time — as one self-contained
+HTML file (inline SVG sparklines, zero JS deps) from either:
 
 - a live `StreamMonitor` (windflow_spark.streaming.monitor), or
 - a progress JSONL file written by its ``sink`` hook
@@ -23,8 +23,13 @@ from __future__ import annotations
 
 import html as _html
 import json
+import os
 import sys
 from collections import defaultdict
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from windflow_spark.streaming.monitor import PHASES, summarize  # noqa: E402
 
 
 def _spark_svg(values: list[float], width: int = 220, height: int = 36) -> str:
@@ -60,14 +65,6 @@ def render_report(
     raw progress histories into one self-contained HTML page."""
     histories = histories or {}
 
-    def pick(d: dict, *keys):
-        # accept both StreamMonitor.stats() keys and this module's
-        # jsonl-derived keys
-        for k in keys:
-            if d.get(k) is not None:
-                return d[k]
-        return None
-
     rows = []
     for qid, s in sorted(stats.items()):
         hist = histories.get(qid, [])
@@ -79,22 +76,23 @@ def render_report(
             for p in hist
         ]
         name = _html.escape(str(s.get("name", "") or qid[:8]))
-        avg_ms = pick(s, "batch_ms_avg", "avg_batch_ms")
-        max_ms = pick(s, "batch_ms_max") or (max(dur) if dur else None)
+        phases = " / ".join(_fmt(s.get(k)) for k in PHASES)
         rows.append(
             "<tr>"
             f"<td><code>{name}</code><br><small>{_html.escape(qid[:18])}</small></td>"
-            f"<td>{_fmt(pick(s, 'n_batches', 'batches'))}</td>"
+            f"<td>{_fmt(s.get('batches'))}</td>"
             f"<td>{_fmt(s.get('total_input_rows'))}</td>"
-            f"<td>{_fmt(pick(s, 'rows_per_sec_avg', 'avg_processed_rows_per_sec'))}</td>"
-            f"<td>{_fmt(avg_ms)} / {_fmt(max_ms)}</td>"
-            f"<td>{_fmt(pick(s, 'state_rows_last', 'state_rows'))}</td>"
-            f"<td>{_fmt(pick(s, 'state_bytes_last', 'state_memory_bytes'))}</td>"
+            f"<td>{_fmt(s.get('avg_processed_rows_per_sec'))}</td>"
+            f"<td>{_fmt(s.get('avg_batch_ms'))} / {_fmt(s.get('max_batch_ms'))}</td>"
+            f"<td>{phases}</td>"
+            f"<td>{_fmt(s.get('state_rows'))}</td>"
+            f"<td>{_fmt(s.get('state_memory_bytes'))}</td>"
+            f"<td>{_fmt(s.get('state_commit_ms_p50'))}</td>"
             f"<td>{_spark_svg(thr)}</td>"
             f"<td>{_spark_svg(dur)}</td>"
             "</tr>"
         )
-    body = "\n".join(rows) or "<tr><td colspan='9'>no queries observed</td></tr>"
+    body = "\n".join(rows) or "<tr><td colspan='11'>no queries observed</td></tr>"
     return f"""<!doctype html>
 <html><head><meta charset="utf-8"><title>windflow_spark stream monitor</title>
 <style>
@@ -110,7 +108,9 @@ StreamingQueryProgress feed (StreamMonitor — the programmatic analog of
 the reference's dashboard; listener-bus sampling, zero hot-path cost).</p>
 <table>
 <tr><th>query</th><th>batches</th><th>input rows</th><th>rows/s avg</th>
-<th>batch ms avg/max</th><th>state rows</th><th>state bytes</th>
+<th>batch ms avg/max</th>
+<th>addBatch / walCommit / commitOffsets / queryPlanning ms p50</th>
+<th>state rows</th><th>state bytes</th><th>state commit ms p50</th>
 <th>throughput</th><th>batch duration</th></tr>
 {body}
 </table></body></html>
@@ -119,8 +119,9 @@ the reference's dashboard; listener-bus sampling, zero hot-path cost).</p>
 
 def render_from_jsonl(path: str) -> str:
     """Build the report straight from a progress-JSONL file (the
-    ``sink`` hook's output) — aggregates computed here so a report can be
-    produced long after the session is gone."""
+    ``sink`` hook's output) — aggregated with the monitor's own
+    ``summarize``, so a report can be produced long after the session is
+    gone."""
     histories: dict[str, list[dict]] = defaultdict(list)
     with open(path) as f:
         for line in f:
@@ -132,33 +133,7 @@ def render_from_jsonl(path: str) -> str:
             except ValueError:
                 continue
             histories[str(d.get("id", ""))].append(d)
-    stats: dict[str, dict] = {}
-    for qid, snaps in histories.items():
-        rows = [int(s.get("numInputRows", 0) or 0) for s in snaps]
-        rps = [float(s.get("processedRowsPerSecond", 0) or 0) for s in snaps]
-        dur = [
-            float((s.get("durationMs") or {}).get("triggerExecution", 0) or 0)
-            for s in snaps
-        ]
-        state_rows = state_bytes = None
-        for s in reversed(snaps):
-            ops = s.get("stateOperators") or []
-            if ops:
-                state_rows = sum(int(o.get("numRowsTotal", 0) or 0) for o in ops)
-                state_bytes = sum(
-                    int(o.get("memoryUsedBytes", 0) or 0) for o in ops
-                )
-                break
-        stats[qid] = {
-            "name": snaps[-1].get("name", ""),
-            "n_batches": len(snaps),
-            "total_input_rows": sum(rows),
-            "rows_per_sec_avg": round(sum(rps) / len(rps), 1) if rps else 0.0,
-            "batch_ms_avg": round(sum(dur) / len(dur), 1) if dur else 0.0,
-            "batch_ms_max": max(dur) if dur else 0.0,
-            "state_rows_last": state_rows,
-            "state_bytes_last": state_bytes,
-        }
+    stats = {qid: summarize(snaps) for qid, snaps in histories.items()}
     return render_report(stats, histories)
 
 

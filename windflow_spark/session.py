@@ -19,6 +19,21 @@ DataFrame context. To get it back, pass
 ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
 PySpark reads the flag at the process's first ``F.*`` or ``Column`` call
 and caches it, so it must be set when the session is built.
+
+Local masters (``local``, ``local[...]``, ``local-cluster[...]``) write
+streaming checkpoints through Spark's ``FileSystemBasedCheckpointFileManager``
+instead of its default ``FileContextBasedCheckpointFileManager``. Without
+Hadoop's native library, every checkpoint file the FileContext manager
+renames forks four ``readlink`` processes (``FileContext.rename`` checks
+both paths, and their ``.crc`` files, with ``getFileLinkStatus``); the
+FileSystem manager makes the same no-overwrite check with ``exists``,
+which forks nothing. That covers the offset and commit logs, the file
+source and sink logs, and the state-store and RocksDB changelog files.
+Cluster masters keep Spark's default, whose rename is atomic on HDFS.
+ARCHITECTURE.md §Session defaults has the rename-semantics evidence, the
+per-batch times and the one behaviour that differs (a state version
+committed twice leaves a temp file); ``extra_conf`` can set the class
+back.
 """
 
 from __future__ import annotations
@@ -26,6 +41,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _is_local(master: str) -> bool:
+    return master.split("[", 1)[0] in ("local", "local-cluster")
 
 
 def get_spark(
@@ -66,6 +90,11 @@ def get_spark(
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/windflow-spark-warehouse"))
     )
+    if _is_local(master):
+        # no forked shell commands per checkpoint file (module docstring)
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

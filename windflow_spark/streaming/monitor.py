@@ -5,8 +5,9 @@ reference wf/basic.hpp:259, surfaced by the WindFlow_Dashboard web UI) that
 reports per-operator throughput and buffer occupancy. Spark's analog signal
 is the StreamingQueryProgress feed; this module packages it as a
 `StreamingQueryListener` that keeps a bounded in-memory history per query
-and exposes aggregate stats — rows/sec, batch durations, stateful-operator
-row counts and memory — without touching the data path (listener callbacks
+and exposes aggregate stats — rows/sec, batch durations and their
+``durationMs`` breakdown, stateful-operator row counts, memory and commit
+time — without touching the data path (listener callbacks
 run on Spark's listener bus thread, not inside tasks, so monitoring cost at
 100 TB is zero on the hot path).
 
@@ -27,7 +28,62 @@ from __future__ import annotations
 import json
 import threading
 from collections import deque
+from statistics import median
 from typing import Callable
+
+# durationMs phases reported as medians over the batches that read rows:
+# the fixed per-batch costs (log writes, planning) next to the work itself
+PHASES = {
+    "add_batch_ms_p50": "addBatch",
+    "wal_commit_ms_p50": "walCommit",
+    "commit_offsets_ms_p50": "commitOffsets",
+    "query_planning_ms_p50": "queryPlanning",
+}
+
+
+def _median(values: list) -> float | None:
+    return float(median(values)) if values else None
+
+
+def summarize(snaps: list[dict], name: str = "") -> dict:
+    """Aggregate stats of one query's progress dicts (oldest first).
+
+    The phase medians and ``state_commit_ms_p50`` (the state operators'
+    ``commitTimeMs``, summed per batch) are taken over the batches that
+    read rows, and are None when there are none; ``state_rows`` and
+    ``state_memory_bytes`` come from the last batch."""
+    rows = [s.get("numInputRows", 0) or 0 for s in snaps]
+    proc = [s.get("processedRowsPerSecond", 0.0) or 0.0 for s in snaps]
+    durs = [
+        (s.get("durationMs") or {}).get("triggerExecution", 0) or 0 for s in snaps
+    ]
+    last_state = snaps[-1].get("stateOperators") or []
+    data = [s for s in snaps if s.get("numInputRows")]
+    out = {
+        "name": name or snaps[-1].get("name") or "",
+        "batches": len(snaps),
+        "last_batch_id": snaps[-1].get("batchId"),
+        "total_input_rows": sum(rows),
+        "avg_processed_rows_per_sec": sum(proc) / len(proc),
+        "avg_batch_ms": sum(durs) / len(durs),
+        "max_batch_ms": max(durs),
+        "state_rows": sum(op.get("numRowsTotal", 0) or 0 for op in last_state),
+        "state_memory_bytes": sum(
+            op.get("memoryUsedBytes", 0) or 0 for op in last_state
+        ),
+    }
+    for key, phase in PHASES.items():
+        out[key] = _median(
+            [s["durationMs"][phase] for s in data if phase in (s.get("durationMs") or {})]
+        )
+    out["state_commit_ms_p50"] = _median(
+        [
+            sum(op.get("commitTimeMs", 0) or 0 for op in s["stateOperators"])
+            for s in data
+            if s.get("stateOperators")
+        ]
+    )
+    return out
 
 
 class StreamMonitor:
@@ -81,38 +137,12 @@ class StreamMonitor:
 
     def stats(self) -> dict[str, dict]:
         """Aggregate per-query stats over the retained history."""
-        out: dict[str, dict] = {}
         with self._lock:
-            for qid, h in self._history.items():
-                snaps = list(h)
-                if not snaps:
-                    continue
-                rows = [s.get("numInputRows", 0) or 0 for s in snaps]
-                proc = [
-                    s.get("processedRowsPerSecond", 0.0) or 0.0 for s in snaps
-                ]
-                durs = [
-                    (s.get("durationMs") or {}).get("triggerExecution", 0) or 0
-                    for s in snaps
-                ]
-                last_state = (snaps[-1].get("stateOperators") or [])
-                out[qid] = {
-                    "name": self._names.get(qid, ""),
-                    "batches": len(snaps),
-                    "last_batch_id": snaps[-1].get("batchId"),
-                    "total_input_rows": sum(rows),
-                    "avg_processed_rows_per_sec": (
-                        sum(proc) / len(proc) if proc else 0.0
-                    ),
-                    "avg_batch_ms": sum(durs) / len(durs) if durs else 0.0,
-                    "state_rows": sum(
-                        op.get("numRowsTotal", 0) or 0 for op in last_state
-                    ),
-                    "state_memory_bytes": sum(
-                        op.get("memoryUsedBytes", 0) or 0 for op in last_state
-                    ),
-                }
-        return out
+            return {
+                qid: summarize(list(h), self._names.get(qid, ""))
+                for qid, h in self._history.items()
+                if h
+            }
 
     def history(self, query_id: str) -> list[dict]:
         """Raw retained progress dicts for one query (oldest first)."""

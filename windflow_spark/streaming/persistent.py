@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 
 from windflow_spark.streaming.keyed import field_names, keyed_fold
 
-__all__ = ["p_map", "p_filter", "p_flatmap", "p_reduce", "p_reduce_tws"]
+__all__ = ["p_map", "p_filter", "p_flatmap", "p_reduce"]
 
 
 def _per_row(emit: Callable[[dict, list], list[Any]]):
@@ -146,62 +146,3 @@ def p_reduce(
         df, key_list, step, output_schema, state_schema, init_state, order=[order_col]
     )
 
-
-def p_reduce_tws(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_col: str,
-    func,
-    output_schema: str,
-    state_schema: str,
-    init_state: tuple,
-) -> DataFrame:
-    """P_Reduce on the MODERN state API (transformWithStateInPandas,
-    Spark ≥4.0): same contract as p_reduce — fold ``func(row, state)`` per
-    key in ``order_col`` order, emit the state after every input — but the
-    per-key state is a typed ValueState in the RocksDB state store (this
-    API REQUIRES the RocksDB provider; apply rocksdb_state_conf()).
-    Runtime dependency: the transformWithState driver worker speaks
-    protobuf — environments without ``google.protobuf`` must use the
-    grouped-state form (p_reduce), which is dependency-free.
-
-    Prefer this form for new code: ValueState/ListState/MapState compose,
-    state has TTL support, and schema evolution is handled by the store —
-    the closest Spark gets to the reference's typed per-key RocksDB state
-    (wf/persistent/p_reduce.hpp:197 + builders_rocksdb.hpp serializers).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_list = list(key_cols)
-    state_names = field_names(state_schema)
-
-    class _Fold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("fold_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = list(self._st.get()) if self._st.exists() else list(init_state)
-            out: list[dict] = []
-            for pdf in rows:
-                pdf = pdf.sort_values(order_col)
-                for row in pdf.to_dict("records"):
-                    func(row, st)
-                    rec = {k: row[k] for k in key_list}
-                    rec[order_col] = row[order_col]
-                    rec.update(zip(state_names, st))
-                    out.append(rec)
-            self._st.update(tuple(st))
-            yield pd.DataFrame(out) if out else pd.DataFrame()
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_list).transformWithStateInPandas(
-        statefulProcessor=_Fold(),
-        outputStructType=output_schema,
-        outputMode="Append",
-        timeMode="None",
-    )

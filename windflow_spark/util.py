@@ -80,7 +80,13 @@ def release_cache(spark) -> int:
     how many RDDs were still persisted. ``spark.catalog.clearCache()`` alone
     misses ``persist()``/``localCheckpoint`` RDDs made inside query
     constructors, so a timed run that skipped this could read data cached
-    by the run before it."""
+    by the run before it. The trained k-means and PQ codebooks that
+    ``functions/similarity.py`` memoizes per ``cache_key`` are dropped too,
+    so the next call with the same key trains again."""
+    from windflow_spark.functions import similarity
+
+    similarity._CODEBOOK_CACHE.clear()
+    similarity._PQ_CACHE.clear()
     spark.catalog.clearCache()
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     ids = list(rdds.keySet())
