@@ -4,6 +4,11 @@ melt at 100 TB (full scans, lost broadcasts, extra shuffles)."""
 
 from __future__ import annotations
 
+import os
+import re
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -782,9 +787,6 @@ def test_plans_md_covers_registry():
     # stale for the final 9 queries because the regen step was skipped
     # after late-round query commits. This makes staleness a test failure:
     # the PLANS.md row set must equal the registry key set exactly.
-    import os
-    import re
-
     plans_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
     )
@@ -797,6 +799,56 @@ def test_plans_md_covers_registry():
     assert not missing and not extra, (
         f"PLANS.md out of sync with registry — regen with "
         f"`python tools/plan_report.py`. missing={missing} extra={extra}"
+    )
+
+
+# A fixed slice of the registry whose PLANS.md rows must match a fresh
+# plan_report run: a row left stale after a plan change fails here, not
+# only a missing or extra row. Together the ten carry every counted column
+# (exchanges, keyed exchanges, BHJ, SMJ, BNLJ).
+PLANS_SLICE = [
+    "q1_pricing_summary",
+    "q6_revenue_filter",
+    "ccf_clicks_purchases_daily",
+    "anova_f_segments",
+    "heaps_law_vocab_growth",
+    "graph_assortativity_copurchase",
+    "scalar_subquery_above_avg",
+    "sim_lsh_recall",
+    "interval_join_bucketed",
+    "q22_idle_customers",
+]
+
+_PLAN_ROW = re.compile(r"^\| (\w+) \| (\d+) \| (\d+) \| (\d+) \| (\d+) \| (\d+) \|", re.M)
+
+
+def _plan_counts(text: str) -> dict[str, tuple[int, ...]]:
+    """query -> (exch, keyed, BHJ, SMJ, BNLJ) from a plan_report table."""
+    return {m[1]: tuple(int(c) for c in m.groups()[1:]) for m in _PLAN_ROW.finditer(text)}
+
+
+def test_plans_md_counts_match_fresh_report(sf_dir, tmp_path):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    fresh = tmp_path / "PLANS.md"
+    cmd = [
+        sys.executable, os.path.join(root, "tools", "plan_report.py"),
+        os.path.join(os.path.dirname(sf_dir), "sf0.01"), "--out", str(fresh),
+    ]
+    for name in PLANS_SLICE:
+        cmd += ["--only", name]
+    # PLANS.md is generated on local[4]; cwd: a bare session puts its
+    # warehouse directory there
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
+    subprocess.run(cmd, cwd=tmp_path, env=env, check=True, capture_output=True, timeout=600)
+    with open(os.path.join(root, "PLANS.md")) as f:
+        committed = _plan_counts(f.read())
+    regenerated = _plan_counts(fresh.read_text())
+    assert sorted(regenerated) == sorted(PLANS_SLICE)
+    stale = {n: (committed.get(n), regenerated[n])
+             for n in PLANS_SLICE if committed.get(n) != regenerated[n]}
+    assert not stale, (
+        f"PLANS.md rows (committed, fresh) differ — regen with "
+        f"`python tools/plan_report.py`: {stale}"
     )
 
 

@@ -10,6 +10,11 @@ For each named query it measures, in a bench-identical warm session:
                 materialized query stage)
   n_stages      total stages across those jobs
   n_tasks       total tasks across those jobs
+  compiles_first / compiles_warm
+                generated classes Janino compiled during the query's first
+                invocation (construction and action) and during its last
+                one; warm invocations compile nothing once every class is
+                in the session's generated-class cache (session.py)
 and prints a per-query line plus two floor baselines:
   job_floor_s   min wall time of a 1-task JVM-only job (a noop write of
                 spark.range(0, 1, 1, 1); no Python worker)
@@ -48,11 +53,17 @@ def main() -> None:
         help="extra spark conf (repeatable) for A/B config experiments",
     )
     args = ap.parse_args()
+    if args.repeats < 2:
+        ap.error("--repeats must be at least 2: a first and a warm invocation")
 
     from bench import warm_session
     from windflow_spark import get_spark
     from windflow_spark import queries as Q
-    from windflow_spark.util import count_py4j_calls, release_cache
+    from windflow_spark.util import (
+        count_codegen_compiles,
+        count_py4j_calls,
+        release_cache,
+    )
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("floor-profile", extra_conf=extra or None)
@@ -78,15 +89,19 @@ def main() -> None:
     for name in args.names:
         fn = qs[name]
         best = None
+        compiles = []
         for r in range(args.repeats):
             group = f"{name}#{r}"
             release_cache(spark)
             t0 = time.time()
-            df, calls = count_py4j_calls(spark, lambda: fn(spark, args.sf_dir))
+            (df, calls), n_compiled = count_codegen_compiles(
+                spark, lambda: count_py4j_calls(spark, lambda: fn(spark, args.sf_dir))
+            )
             t1 = time.time()
             sc.setJobGroup(group, name)
-            _noop_write(df)
+            n_compiled += count_codegen_compiles(spark, lambda: _noop_write(df))[1]
             t2 = time.time()
+            compiles.append(n_compiled)
             jobs = st.getJobIdsForGroup(group)
             n_stages = 0
             n_tasks = 0
@@ -110,6 +125,8 @@ def main() -> None:
             }
             if best is None or rec["exec_s"] < best["exec_s"]:
                 best = rec
+        best["compiles_first"] = compiles[0]
+        best["compiles_warm"] = compiles[-1]
         rows.append(best)
         print(json.dumps(best))
     out["queries"] = rows

@@ -7,11 +7,15 @@ registry, the auditable artifact behind the scale claims:
 - WholeStageCodegen span count (fusion),
 - whether any parquet scan carries pushed filters / a pruned read schema.
 
-Run: python tools/plan_report.py  (writes PLANS.md at the repo root)
+Run: python tools/plan_report.py [sf_dir]  (writes PLANS.md at the repo root)
+     python tools/plan_report.py [sf_dir] --out PATH --only NAME [--only NAME ...]
+     (the same report for the named queries only, written to PATH;
+     tests/test_plans.py compares a slice of PLANS.md with such a run)
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -22,11 +26,23 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    from windflow_spark.tables import DEFAULT_SF_DIR
+
+    ap = argparse.ArgumentParser()
+    # PLANS.md is generated at sf0.01, next to the default (sf0.1) test data
+    ap.add_argument("sf_dir", nargs="?",
+                    default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"))
+    ap.add_argument("--out", default=os.path.join(ROOT, "PLANS.md"))
+    ap.add_argument("--only", action="append", metavar="NAME",
+                    help="report only these queries (repeatable)")
+    args = ap.parse_args()
+
     from pyspark.sql import SparkSession
 
+    master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
     spark = (
         SparkSession.builder.appName("plan_report")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        .master(master)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
@@ -36,11 +52,15 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from windflow_spark.plans.explain import physical_plan
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = args.sf_dir
+    queries = entry_mod.queries()
+    unknown = sorted(set(args.only or ()) - set(queries))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     lines = [
         "# PLANS — physical-plan properties per registry query",
         "",
-        f"Generated by `tools/plan_report.py` on a bare session at {sf_dir}.",
+        f"Generated by `tools/plan_report.py` on a bare `{master}` session at {sf_dir}.",
         "Columns: total Exchange operators; KEYED exchanges (hash/range — the",
         "algorithmic shuffles; round-robin input wideners excluded); join",
         "strategies (BHJ=broadcast hash, SMJ=sort-merge, BNLJ=broadcast",
@@ -52,7 +72,9 @@ def main() -> None:
         "|---|---|---|---|---|---|---|",
     ]
     totals = {"exch": 0, "keyed": 0, "smj": 0, "bnlj": 0}
-    for name, fn in entry_mod.queries().items():
+    for name, fn in queries.items():
+        if args.only and name not in args.only:
+            continue
         try:
             plan = physical_plan(fn(spark, sf_dir))
         except Exception as exc:  # surface, never skip silently
@@ -81,10 +103,9 @@ def main() -> None:
         "and per-query keyed-shuffle expectations.",
         "",
     ]
-    out = os.path.join(ROOT, "PLANS.md")
-    with open(out, "w") as f:
+    with open(args.out, "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote {out}")
+    print(f"wrote {args.out}")
     spark.stop()
 
 

@@ -22,7 +22,14 @@ reference's finite-stream test harness shape):
   page_hinkley per-key Page-Hinkley drift monitor, 1s buckets
               (open bucket + 4 recursion scalars per key)
 
-Prints one JSON line: rows/sec per pipeline.
+Each pipeline is replayed ``REPLAYS`` times, each replay on a fresh
+checkpoint: one replay is a single data batch, and replays of the same
+code differ by up to 40 %. Prints one JSON line: per pipeline the median
+rows/sec over the replays (``<name>_rows_per_sec``) and their spread,
+(max - min) / median (``<name>_spread``).
+
+Runs on local[$SPARK_GRAFT_CPUS], or on as many cores as this process may
+use when that is unset.
 
 Usage: python tools/stream_bench.py [n_rows] (default 5_000_000)
 """
@@ -32,11 +39,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+REPLAYS = 3
 
 
 def main() -> None:
@@ -46,7 +56,8 @@ def main() -> None:
     from windflow_spark import get_spark
     from windflow_spark.streaming import file_stream
 
-    spark = get_spark("stream-bench")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark("stream-bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     work = tempfile.mkdtemp(prefix="stream_bench_")
@@ -62,10 +73,10 @@ def main() -> None:
     data.write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
-    def run(label: str, build) -> float:
+    def replay(label: str, build, r: int) -> float:
         stream = file_stream(spark, src, schema)
         out = build(stream)
-        ckpt = os.path.join(work, f"ckpt_{label}")
+        ckpt = os.path.join(work, f"ckpt_{label}_{r}")
         t0 = time.time()
         # window agg needs update mode; stateless + applyInPandasWithState
         # (declared Append) need append
@@ -78,10 +89,17 @@ def main() -> None:
             .start()
         )
         q.awaitTermination()
-        return round(n / (time.time() - t0))
+        return n / (time.time() - t0)
 
-    results = {}
-    results["stateless_rows_per_sec"] = run(
+    results = {"replays": REPLAYS}
+
+    def run(label: str, build) -> None:
+        rates = [replay(label, build, r) for r in range(REPLAYS)]
+        mid = statistics.median(rates)
+        results[f"{label}_rows_per_sec"] = round(mid)
+        results[f"{label}_spread"] = round((max(rates) - min(rates)) / mid, 3)
+
+    run(
         "stateless",
         lambda s: s.filter(F.col("value") >= 1).select(
             "key", (F.col("value") * 2 + 1).alias("v2"), "ts"
@@ -90,7 +108,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_tumbling_window_tb
 
-    results["window_rows_per_sec"] = run(
+    run(
         "window",
         lambda s: streaming_tumbling_window_tb(
             s, ["key"], "ts", 1_000_000,
@@ -100,13 +118,13 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_rolling_reduce
 
-    results["reduce_rows_per_sec"] = run(
+    run(
         "reduce", lambda s: streaming_rolling_reduce(s, ["key"], "ts", "value")
     )
 
     from windflow_spark.streaming import streaming_heavy_hitters
 
-    results["sketch_rows_per_sec"] = run(
+    run(
         "sketch",
         lambda s: streaming_heavy_hitters(
             s.select(F.concat(F.lit("k"), F.col("key")).alias("token")),
@@ -118,7 +136,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_ohlc
 
-    results["ohlc_rows_per_sec"] = run(
+    run(
         "ohlc",
         lambda s: streaming_ohlc(
             s.select(
@@ -134,7 +152,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_holt
 
-    results["holt_rows_per_sec"] = run(
+    run(
         "holt",
         lambda s: streaming_holt(
             s.select(
@@ -148,7 +166,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_debounce
 
-    results["debounce_rows_per_sec"] = run(
+    run(
         "debounce",
         lambda s: streaming_debounce(
             s.select(
@@ -162,7 +180,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_alert_hysteresis
 
-    results["hysteresis_rows_per_sec"] = run(
+    run(
         "hysteresis",
         lambda s: streaming_alert_hysteresis(
             s.select(
@@ -178,7 +196,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_space_saving
 
-    results["space_saving_rows_per_sec"] = run(
+    run(
         "space_saving",
         lambda s: streaming_space_saving(
             s.select(
@@ -220,11 +238,11 @@ def main() -> None:
             watermark_us=1_000_000,
         )
 
-    results["asof_rows_per_sec"] = run("asof", _asof)
+    run("asof", _asof)
 
     from windflow_spark.streaming import streaming_kmv_distinct
 
-    results["kmv_rows_per_sec"] = run(
+    run(
         "kmv",
         lambda s: streaming_kmv_distinct(
             s.select(
@@ -242,7 +260,7 @@ def main() -> None:
 
     from windflow_spark.streaming import streaming_page_hinkley
 
-    results["page_hinkley_rows_per_sec"] = run(
+    run(
         "page_hinkley",
         lambda s: streaming_page_hinkley(
             s.select(

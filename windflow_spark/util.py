@@ -116,3 +116,16 @@ def count_py4j_calls(spark, fn):
     finally:
         client.send_command = send
     return result, n
+
+
+def count_codegen_compiles(spark, fn):
+    """Call ``fn()``; return ``(result, n)``, where n is the number of
+    generated classes Janino compiled meanwhile, read from Spark's
+    ``CodegenMetrics`` compilation-time histogram. The histogram is one per
+    JVM, so the count covers the driver and, on local masters, the tasks
+    too, and it includes anything else the JVM compiles at the same time.
+    A class found in the generated-class cache is not compiled again."""
+    metric = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metric.METRIC_COMPILATION_TIME().getCount()
+    result = fn()
+    return result, metric.METRIC_COMPILATION_TIME().getCount() - before
