@@ -57,3 +57,23 @@ def test_dsum_helper_still_decimal():
     # F.round(F.sum(expr), 2) would silently reopen the whole class).
     m = re.search(r"def _dsum.*?return (.+)\n", QUERIES_SRC, re.S)
     assert m and 'cast("decimal(18,6)")' in m.group(1)
+
+
+def test_decimal_div_truncates_toward_zero(spark):
+    """embedding_pca_power_iteration reproduces Spark's DECIMAL `div` in
+    the driver; DECIMAL div must truncate toward zero (Python // floors,
+    which differs on negatives) — pin the engine semantic the fold
+    assumes, on both sign combinations."""
+    row = spark.sql(
+        "SELECT CAST(CAST(-7000000 AS DECIMAL(38,0)) div 3 AS LONG) AS a, "
+        "CAST(CAST(7000000 AS DECIMAL(38,0)) div -3 AS LONG) AS b, "
+        "CAST(CAST(7000000 AS DECIMAL(38,0)) div 3 AS LONG) AS c"
+    ).first()
+
+    def tdiv(a: int, b: int) -> int:
+        q = abs(a) // abs(b)
+        return q if (a >= 0) == (b >= 0) else -q
+
+    assert row["a"] == tdiv(-7000000, 3) == -2333333
+    assert row["b"] == tdiv(7000000, -3) == -2333333
+    assert row["c"] == tdiv(7000000, 3) == 2333333

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from windflow_spark.operators.interval_join import interval_join
 from windflow_spark.operators.reduce import rolling_reduce
 from windflow_spark.operators.routing import merge_pipes, split_by, split_pipe
+from windflow_spark.plans.explain import keyed_shuffle_count, physical_plan
 
 SEC = 1_000_000
 
@@ -1099,3 +1100,75 @@ def test_pagerank_dangling_node_gets_base_mass(spark):
     got = {r.node: r.pr for r in pagerank(df, iters=1, damping=0.85).collect()}
     assert got[1] == round(1.0 - 0.85, 6)          # no in-edges: base only
     assert got[2] == round((1.0 - 0.85) + 0.85 * 1.0, 6)
+
+
+def test_capped_baskets_partitioning_shared_downstream(spark, sf_dir):
+    """capped_baskets establishes hash(ck) once; a downstream ck-keyed
+    aggregation must introduce NO additional keyed exchange (the subset
+    clustering rule the recsys queries rely on)."""
+    from windflow_spark.operators.recsys import capped_baskets
+    from windflow_spark.tables import load_table
+
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    b = capped_baskets(li, o, basket_cap=10)
+    base = keyed_shuffle_count(b)
+    agged = b.groupBy("ck").agg(F.count(F.lit(1)).alias("n"))
+    assert keyed_shuffle_count(agged) == base, (
+        "groupBy(ck) after capped_baskets must reuse the internal hash(ck)"
+        " exchange, not add one"
+    )
+
+
+def test_itemitem_topk_no_window_roundtrip(spark, sf_dir):
+    """Per-item counts attach via a broadcast join, not a partitionBy(pk)
+    window — the model plan must contain a broadcast join and no Window
+    over pk (only the final per-item rank window remains)."""
+    from windflow_spark.operators.recsys import capped_baskets, itemitem_topk
+    from windflow_spark.tables import load_table
+
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    model = itemitem_topk(capped_baskets(li, o, basket_cap=10))
+    plan = physical_plan(model)
+    assert "BroadcastHashJoin" in plan
+    # no pk-partitioned window remains (the old per-item count window);
+    # the surviving windows partition by ck (recency cap) and item_a
+    # (final rank) only
+    assert "windowspecdefinition(pk#" not in plan
+
+
+def test_exact_jaccard_prefix_checkpoints_shingle_frame(spark, sf_dir):
+    """The prefix audit's plan reads materialized RDDs (shingle + prefix
+    frames), so the tokenize/shingle chain cannot re-run per consumer."""
+    from windflow_spark.functions.dedup import exact_jaccard_pairs_prefix
+    from windflow_spark.tables import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    pairs = exact_jaccard_pairs_prefix(docs, 4, 5)
+    assert physical_plan(pairs).count("Scan ExistingRDD") >= 2
+
+
+def test_knn_graph_lsh_bucket_cap_slice_equivalence(spark):
+    """slice(array_sort(collect_list(id)), 1, cap) keeps the same id set
+    as row_number() over (partition by bucket order by id) <= cap — the
+    truncation identity knn_graph_lsh's grouped buckets rely on."""
+    from pyspark.sql import Window as W
+
+    rows = [(b, i) for b in range(3) for i in range(7, -1, -1)]
+    df = spark.createDataFrame(rows, "bkt int, vec_id long")
+    cap = 5
+    grouped = df.groupBy("bkt").agg(
+        F.slice(F.array_sort(F.collect_list("vec_id")), 1, cap).alias("ids")
+    )
+    got = {
+        (r["bkt"], i) for r in grouped.collect() for i in r["ids"]
+    }
+    w = W.partitionBy("bkt").orderBy("vec_id")
+    ranked = (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= cap)
+        .select("bkt", "vec_id")
+    )
+    want = {(r["bkt"], r["vec_id"]) for r in ranked.collect()}
+    assert got == want

@@ -1152,3 +1152,63 @@ def test_r11_additions_exchange_budgets(spark, sf_dir):
         if got > budget:
             over[name] = (got, budget)
     assert not over, f"keyed-exchange budgets exceeded: {over}"
+
+
+def test_assoc_rules_lift_no_window_no_eager_count(spark, sf_dir):
+    """The pair miner derives per-item counts via a guarded broadcast join
+    (no full-frame pk window) and attaches the basket total as an in-plan
+    one-row cross join (no eager driver count job)."""
+    from windflow_spark.queries import assoc_rules_lift
+
+    df = assoc_rules_lift(spark, sf_dir)
+    plan = physical_plan(df)
+    # the old shape had a count() window partitioned by pk
+    assert "windowspecdefinition" not in plan
+    # the one-row basket total rides a broadcast nested loop cross join
+    assert "BroadcastNestedLoopJoin" in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["recsys_hitrate_at3", "recsys_ndcg_at3", "recsys_mrr_at5", "recsys_map_at3"],
+)
+def test_recsys_eval_shared_base_single_join(spark, sf_dir, name):
+    """Each temporal-holdout eval query derives BOTH halves from the one
+    persisted join frame of `_recsys_holdout` — the plan must scan
+    lineitem at most once, and the midpoint cut rides a broadcast one-row
+    aggregate (no driver-side cut)."""
+    df = QUERIES[name](spark, sf_dir)
+    plan = physical_plan(df)
+    assert plan.count("lineitem.parquet") <= 1, (
+        f"{name}: train AND test halves must come from the single "
+        "persisted lineitem join, not one scan per half"
+    )
+
+
+def test_knn_graph_lsh_grouped_bucket_pairs(spark, sf_dir):
+    """Candidate pairs are expanded IN-ROW from grouped buckets — no
+    bucket self-join (SortMergeJoin) and only the final top-3 window
+    remains (the bucket-cap window is replaced by slice(sorted ids))."""
+    from windflow_spark.queries import knn_graph_lsh
+
+    df = knn_graph_lsh(spark, sf_dir)
+    plan = physical_plan(df)
+    assert "SortMergeJoin" not in plan
+    # exactly one window spec: the final per-query rank
+    assert plan.count("windowspecdefinition(qid#") == plan.count(
+        "windowspecdefinition("
+    )
+
+
+def test_pca_power_iteration_driver_fold(spark, sf_dir):
+    """The three exact-integer mat-vec rounds run on the DRIVER over the
+    dimension-bounded (64x64) collected matrix; the returned frame is a
+    dim-sized local result with only the ordering/rounding projection —
+    no joins, no corpus scan, no exchange left in the final plan."""
+    from windflow_spark.queries import embedding_pca_power_iteration
+
+    df = embedding_pca_power_iteration(spark, sf_dir)
+    plan = physical_plan(df)
+    assert "Join" not in plan
+    assert ".parquet" not in plan
+    assert df.count() == 8

@@ -5,6 +5,8 @@ result invariance across engines replaces the reference's global checksum)."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -36,6 +38,21 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     ddf = duck.execute(ORACLES[name]).df()
     problems = compare(name, sdf, ddf)
     assert not problems, f"{name}: {problems}"
+
+
+def test_check_correctness_runs_outside_repo_root(sf_dir, tmp_path):
+    # pandas-UDF workers must find windflow_spark when the tool is started
+    # from another directory; PYTHONPATH is dropped so the child relies on
+    # nothing this test process exported
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "check_correctness.py"),
+         sf_dir, "multimodal_decode"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "PASS multimodal_decode" in out.stdout, out.stdout[-2000:]
 
 
 def test_entry_smoke(spark):

@@ -19,6 +19,20 @@ broadcast hints for small dimensions, partial aggregation, pushdown-friendly
 expressions, AQE-assisted shuffles.
 """
 
+import os as _os
+
+# Python UDF workers import this package by name when they unpickle a
+# function. They are started by the JVM with the PYTHONPATH the JVM
+# inherited from this process, not with this process's sys.path; so a
+# script that only put the repository on sys.path, run from another
+# directory, left its workers without the package. Export the directory
+# holding the package before any session starts.
+_ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+if _ROOT not in _os.environ.get("PYTHONPATH", "").split(_os.pathsep):
+    _os.environ["PYTHONPATH"] = _os.pathsep.join(
+        p for p in (_ROOT, _os.environ.get("PYTHONPATH")) if p
+    )
+
 from windflow_spark.session import get_spark, stop_spark
 from windflow_spark.tables import TABLE_NAMES, load_table, load_tables
 from windflow_spark.core.graph import PipeGraph, MultiPipe, ExecutionMode, TimePolicy

@@ -6294,6 +6294,53 @@ def itemitem_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The u<v co-purchase edge list shared by `graph_triangle_count`,
+    `k_core_copurchase`, `k_core_fixed_point` and
+    `graph_assortativity_copurchase`: parts with p_size <= 25 bought in
+    the same order are adjacent. Edges are generated in-row from the
+    sorted per-order basket arrays (baskets are bounded per order), never
+    by an order-keyed self-join. There is no pre-basket `.distinct()`:
+    `collect_set` dedups (ok, pk) itself (and Catalyst's
+    RemoveRedundantAggregates drops such a distinct below a collect_set
+    anyway, so the plan is the same either way)."""
+    pt = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 25).select("p_partkey")
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .join(F.broadcast(pt), F.col("l_partkey") == F.col("p_partkey"))
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+    )
+    baskets = li.groupBy("ok").agg(F.array_sort(F.collect_set("pk")).alias("ps"))
+    return (
+        baskets.select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        F.col("ps"),
+                        lambda x, i: F.transform(
+                            F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
+                            lambda y: F.struct(x.alias("u"), y.alias("v")),
+                        ),
+                    )
+                )
+            ).alias("p")
+        )
+        .select("p.u", "p.v")
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """Per-node degree (n, d) of a u<v edge list: one keyed count over
+    both endpoint columns."""
+    return (
+        e.select(F.col("u").alias("n"))
+        .unionAll(e.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
+    )
+
+
 @register(
     "graph_triangle_count",
     """
@@ -6327,43 +6374,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed by one more join) — the same count, but the wedge set shrinks
     from sum(C(deg,2)) to O(m^1.5): on a power-law co-purchase graph at
     100 TB the hub vertices would otherwise generate quadratic wedge
-    blowups on single keys. Edge generation itself is in-row from
-    per-order basket arrays (baskets are bounded per order), never an
-    order-keyed self-join."""
+    blowups on single keys. The edge list is `_copurchase_pairs`."""
     from windflow_spark.operators.graph import triangle_count
 
-    pt = (
-        _t(spark, sf_dir, "part")
-        .filter(F.col("p_size") <= 25)
-        .select("p_partkey")
-    )
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(pt), F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    baskets = li.groupBy("ok").agg(
-        F.array_sort(F.collect_set("pk")).alias("ps")
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    return triangle_count(pairs)
+    return triangle_count(_copurchase_pairs(spark, sf_dir))
 
 
 @register(
@@ -7251,6 +7265,88 @@ def approx_overlap_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recsys_holdout(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Temporal holdout shared by the four recsys evaluations
+    (`recsys_hitrate_at3`, `recsys_ndcg_at3`, `recsys_mrr_at5`,
+    `recsys_map_at3`). Orders are split at the exact midpoint order-date
+    (epoch-µs BIGINT midpoint, no sampling).
+
+    Returns ``(base, b)``: ``base`` = persisted (ck, pk, od, _train) rows
+    of the single lineitem⋈orders join, hash(ck)-partitioned; ``b`` = the
+    persisted train baskets, capped at each customer's 10 most recent
+    items. The callers take the test half as ``base.filter(~_train)``."""
+    from windflow_spark.operators.recsys import cap_recent
+    from windflow_spark.operators.timeutil import event_micros
+
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders")
+    ou = o.withColumn("_ou", event_micros(o, "o_orderdate"))
+    # the midpoint cut stays IN-PLAN as a broadcast one-row aggregate
+    # instead of a driver collect — one fewer eager job per eval query,
+    # and the same exact BIGINT midpoint semantics
+    cutf = ou.agg(F.expr("(min(_ou) + max(_ou)) div 2").alias("_cut"))
+    ob = ou.crossJoin(F.broadcast(cutf))
+    # ONE lineitem⋈orders join + ONE hash(ck) exchange serves BOTH holdout
+    # halves — scanning and joining lineitem once per half doubled that
+    # work. The train cap (groupBy(ck,pk) + ck-window) and the test
+    # distinct both cluster by supersets of ck, so neither adds an
+    # exchange over the persisted base.
+    base = (
+        li.join(ob, li.l_orderkey == ob.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("ck"),
+            F.col("l_partkey").alias("pk"),
+            F.col("o_orderdate").alias("od"),
+            (F.col("_ou") <= F.col("_cut")).alias("_train"),
+        )
+        .repartition(spark.sparkContext.defaultParallelism, "ck")
+        .persist()
+    )
+    b = cap_recent(base.filter(F.col("_train")), basket_cap=10).persist()
+    return base, b
+
+
+def _recsys_ranked(b: DataFrame, sf_dir: str, k: int) -> DataFrame:
+    """Top-k recommendations (ck, pk, pos) per customer of the train
+    baskets ``b`` (from `_recsys_holdout`), shared by `recsys_ndcg_at3`,
+    `recsys_mrr_at5` and `recsys_map_at3`. Candidates are the union of the
+    cosine top-3 neighbor lists (`itemitem_topk`, min co-occurrence 2) of
+    the basket's items, minus the basket's own items. The score is the
+    cosine sum SCALED TO 1e-6-integer BIGINTs — float association in a
+    sum of 6dp-rounded cosines could flip near-ties across engines,
+    integers cannot — ranked by (score desc, pk) with row_number."""
+    from windflow_spark.operators.recsys import itemitem_topk
+
+    model = itemitem_topk(
+        b, min_cooc=2, topk=3, item_est_bytes=_catalog_est(sf_dir, 1, 16)
+    ).select("item_a", "item_b", "cosine_sim")
+    cand = (
+        b.join(
+            maybe_broadcast(model, _catalog_est(sf_dir, 3, 32)),
+            b.pk == model.item_a,
+        )
+        .join(
+            b.select(F.col("ck").alias("ck2"), F.col("pk").alias("pk2")),
+            (F.col("ck") == F.col("ck2")) & (F.col("item_b") == F.col("pk2")),
+            "left_anti",
+        )
+        .groupBy("ck", F.col("item_b").alias("cpk"))
+        .agg(
+            F.sum(F.round(F.col("cosine_sim") * 1_000_000).cast("long"))
+            .cast("long")
+            .alias("score")
+        )
+    )
+    wtop = W.partitionBy("ck").orderBy(F.col("score").desc(), F.col("cpk"))
+    return (
+        cand.withColumn("pos", F.row_number().over(wtop))
+        .filter(F.col("pos") <= k)
+        .select("ck", F.col("cpk").alias("pk"), "pos")
+    )
+
+
 @register(
     "recsys_hitrate_at3",
     """
@@ -7304,43 +7400,17 @@ def approx_overlap_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def recsys_hitrate_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal-holdout evaluation of the item-item recommender — the
     measured-quality artifact for the recsys family, exactly as
-    sim_*_recall measures the ANN family. Orders are split at the exact
-    midpoint order-date (epoch-µs BIGINT midpoint, no sampling); the
-    itemitem model trains on the PAST half only; a held-out user scores a
-    hit when any future purchase appears among the top-3 neighbors of
-    their train basket. Output: eval/hit user counts, hit rate (one
-    BIGINT division — bit-identical), and distinct recommended items
-    (catalog coverage). Same capped-basket scale shape as the model
-    itself; evaluation adds only co-partitioned (ck, pk) joins."""
-    from windflow_spark.operators.recsys import cap_recent, itemitem_topk
-    from windflow_spark.operators.timeutil import event_micros
+    sim_*_recall measures the ANN family. The holdout is
+    `_recsys_holdout` (exact midpoint order-date cut); the itemitem model
+    trains on the PAST half only; a held-out user scores a hit when any
+    future purchase appears among the top-3 neighbors of their train
+    basket. Output: eval/hit user counts, hit rate (one BIGINT division —
+    bit-identical), and distinct recommended items (catalog coverage).
+    Same capped-basket scale shape as the model itself; evaluation adds
+    only co-partitioned (ck, pk) joins."""
+    from windflow_spark.operators.recsys import itemitem_topk
 
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    ou = o.withColumn("_ou", event_micros(o, "o_orderdate"))
-    # r12 (guide §5): the midpoint cut stays IN-PLAN as a broadcast
-    # one-row aggregate instead of a driver collect — one fewer eager job
-    # per eval query, and the same exact BIGINT midpoint semantics
-    cutf = ou.agg(F.expr("(min(_ou) + max(_ou)) div 2").alias("_cut"))
-    ob = ou.crossJoin(F.broadcast(cutf))
-    # r12 (guide §2.4, measured): ONE lineitem⋈orders join + ONE hash(ck)
-    # exchange serves BOTH holdout halves — the old shape scanned and
-    # joined lineitem twice (train chain inside capped_baskets, test
-    # chain its own join+distinct). The train cap (groupBy(ck,pk) +
-    # ck-window) and the test distinct both cluster by supersets of ck,
-    # so neither adds an exchange over the persisted base.
-    base = (
-        li.join(ob, li.l_orderkey == ob.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_partkey").alias("pk"),
-            F.col("o_orderdate").alias("od"),
-            (F.col("_ou") <= F.col("_cut")).alias("_train"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "ck")
-        .persist()
-    )
-    b = cap_recent(base.filter(F.col("_train")), basket_cap=10).persist()
+    base, b = _recsys_holdout(spark, sf_dir)
     model = (
         itemitem_topk(
         b, min_cooc=2, topk=3, item_est_bytes=_catalog_est(sf_dir, 1, 16)
@@ -8702,6 +8772,27 @@ def curate_quality_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily event-count series (event_type, bidx, cnt): bidx is the UTC
+    day index floor(epoch-µs / US_DAY), cnt the BIGINT event count — one
+    keyed aggregation over the raw events. Shared by the daily-series
+    queries (`ts_acf_daily`, `ts_mase_seasonal_naive`,
+    `ts_theilsen_trend`, `durbin_watson_daily_events`,
+    `ts_bollinger_daily`, `mann_kendall_trend_daily`,
+    `sax_symbols_daily`, `hurst_rs_daily`); the frame is calendar-bounded,
+    so everything downstream of it is dimension-scale."""
+    from windflow_spark.operators.timeutil import event_micros
+
+    ev = _t(spark, sf_dir, "events")
+    return (
+        ev.withColumn(
+            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
+        )
+        .groupBy("event_type", "bidx")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
 @register(
     "ts_acf_daily",
     f"""
@@ -8742,16 +8833,8 @@ def ts_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — and all window state — stays dimension-scale no matter how
     many raw events the scan reads. Spark corr ≡ DuckDB corr (both
     sample Pearson; 6dp collapses summation-order ulps)."""
-    from windflow_spark.operators.timeutil import event_micros
-
-    e = _t(spark, sf_dir, "events")
-    day = F.floor(event_micros(e, "ts") / F.lit(US_DAY)).cast("long")
-    c = (
-        e.withColumn("_day", day)
-        .groupBy("event_type", "_day")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    w = W.partitionBy("event_type").orderBy("_day")
+    c = _daily_event_counts(spark, sf_dir)
+    w = W.partitionBy("event_type").orderBy("bidx")
     l = c.select(
         "event_type",
         "cnt",
@@ -8809,16 +8892,8 @@ def ts_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ts_acf_daily (two lag frames, one exchange); integer |errors|
     averaged as doubles and rounded (integer sums would be exact, but the
     ratio is a double either way)."""
-    from windflow_spark.operators.timeutil import event_micros
-
-    e = _t(spark, sf_dir, "events")
-    day = F.floor(event_micros(e, "ts") / F.lit(US_DAY)).cast("long")
-    c = (
-        e.withColumn("_day", day)
-        .groupBy("event_type", "_day")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    w = W.partitionBy("event_type").orderBy("_day")
+    c = _daily_event_counts(spark, sf_dir)
+    w = W.partitionBy("event_type").orderBy("bidx")
     l = c.select(
         "event_type",
         "cnt",
@@ -8868,25 +8943,17 @@ def ts_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer subtraction and one division — bit-identical across engines —
     and Spark percentile ≡ DuckDB quantile_cont bit-exact (established
     parity)."""
-    from windflow_spark.operators.timeutil import event_micros
-
-    e = _t(spark, sf_dir, "events")
-    day = F.floor(event_micros(e, "ts") / F.lit(US_DAY)).cast("long")
-    c = (
-        e.withColumn("_day", day)
-        .groupBy("event_type", "_day")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     a = c.alias("a")
     b = c.alias("b")
     slope = (
         (F.col("b.cnt") - F.col("a.cnt")).cast("double")
-        / (F.col("b._day") - F.col("a._day"))
+        / (F.col("b.bidx") - F.col("a.bidx"))
     ).alias("slope")
     p = a.join(
         b,
         (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a._day") < F.col("b._day")),
+        & (F.col("a.bidx") < F.col("b.bidx")),
     ).select(F.col("a.event_type").alias("event_type"), slope)
     return p.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -10995,6 +11062,31 @@ def weighted_median_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _one_way_anova(g: DataFrame) -> DataFrame:
+    """One-way ANOVA fold shared by `anova_f_segments` and
+    `levene_bf_segments`: from the per-group moments ``g`` (n, m = mean,
+    v = sample variance), one row (k, n_total, ssb, ssw) — group count,
+    total count, between- and within-group sums of squares. The grand
+    mean and both sums are algebra over the group-sized frame, never a
+    second fact pass."""
+    t = g.agg(
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.sum("n").cast("long").alias("n_total"),
+        (F.sum(F.col("n") * F.col("m")) / F.sum("n")).alias("gm"),
+        F.sum(F.col("v") * (F.col("n") - 1)).alias("ssw"),
+    )
+    return (
+        g.crossJoin(F.broadcast(t))
+        .groupBy("k", "n_total")
+        .agg(
+            F.sum(
+                F.col("n") * (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))
+            ).alias("ssb"),
+            F.max("ssw").alias("ssw"),
+        )
+    )
+
+
 @register(
     "anova_f_segments",
     """
@@ -11028,8 +11120,8 @@ def anova_f_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalization of `ab_test_welch` (on this synthetic feed segments
     don't differ, so F ≈ 1 and η² ≈ 0: a verified null). Everything
     derives from ONE per-segment moment pass (n, mean, variance): the
-    grand mean and both sums of squares are algebra over the 5-row
-    summary — no second fact scan, no row-level residuals."""
+    grand mean and both sums of squares are `_one_way_anova` algebra over
+    the 5-row summary — no second fact scan, no row-level residuals."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     g = (
@@ -11041,22 +11133,7 @@ def anova_f_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.var_samp("o_totalprice").alias("v"),
         )
     )
-    t = g.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n").cast("long").alias("n_total"),
-        (F.sum(F.col("n") * F.col("m")) / F.sum("n")).alias("gm"),
-        F.sum(F.col("v") * (F.col("n") - 1)).alias("ssw"),
-    )
-    b = (
-        g.crossJoin(F.broadcast(t))
-        .groupBy("k", "n_total")
-        .agg(
-            F.sum(
-                F.col("n") * (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))
-            ).alias("ssb"),
-            F.max("ssw").alias("ssw"),
-        )
-    )
+    b = _one_way_anova(g)
     return b.select(
         "k",
         "n_total",
@@ -12340,71 +12417,16 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def recsys_ndcg_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@3 of the item-item recommender under the same temporal
-    holdout as `recsys_hitrate_at3` — rank-aware evaluation (a hit at
-    position 1 is worth 2× one at position 3), the second standard
-    recsys metric. Per held-out user, candidates are the union of the
-    top-3 neighbor lists of their train basket, scored by SUMMED cosine
-    and ranked; train-basket items are excluded (standard). The ranking
-    key is the cosine sum SCALED TO 1e-6-integer BIGINTs — float
-    association in a sum of 6dp-rounded cosines could flip near-ties
-    across engines, integers cannot. IDCG is the closed form over
-    min(3, n_rel) ideal positions. Same capped-basket bounded shapes as
-    the model; the eval adds co-partitioned (ck, pk) joins only."""
-    from windflow_spark.operators.recsys import cap_recent, itemitem_topk
-    from windflow_spark.operators.timeutil import event_micros
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    ou = o.withColumn("_ou", event_micros(o, "o_orderdate"))
-    # r12 (guide §5): midpoint cut stays IN-PLAN as a broadcast one-row
-    # aggregate instead of a driver collect — one fewer eager job
-    cutf = ou.agg(F.expr("(min(_ou) + max(_ou)) div 2").alias("_cut"))
-    ob = ou.crossJoin(F.broadcast(cutf))
-    # r12 (guide §2.4, measured): ONE lineitem⋈orders join + ONE hash(ck)
-    # exchange serves BOTH holdout halves (train cap and test distinct
-    # cluster by supersets of ck — no exchange over the persisted base);
-    # the old shape scanned and joined lineitem once per half.
-    base = (
-        li.join(ob, li.l_orderkey == ob.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_partkey").alias("pk"),
-            F.col("o_orderdate").alias("od"),
-            (F.col("_ou") <= F.col("_cut")).alias("_train"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "ck")
-        .persist()
-    )
-    b = cap_recent(base.filter(F.col("_train")), basket_cap=10).persist()
-    model = itemitem_topk(
-        b, min_cooc=2, topk=3, item_est_bytes=_catalog_est(sf_dir, 1, 16)
-    ).select(
-        "item_a", "item_b", "cosine_sim"
-    )
-    cand = (
-        b.join(
-            maybe_broadcast(model, _catalog_est(sf_dir, 3, 32)),
-            b.pk == model.item_a,
-        )
-        .join(
-            b.select(F.col("ck").alias("ck2"), F.col("pk").alias("pk2")),
-            (F.col("ck") == F.col("ck2")) & (F.col("item_b") == F.col("pk2")),
-            "left_anti",
-        )
-        .groupBy("ck", F.col("item_b").alias("cpk"))
-        .agg(
-            F.sum(F.round(F.col("cosine_sim") * 1_000_000).cast("long"))
-            .cast("long")
-            .alias("score")
-        )
-    )
-    wtop = W.partitionBy("ck").orderBy(F.col("score").desc(), F.col("cpk"))
-    top3 = (
-        cand.withColumn("pos", F.row_number().over(wtop))
-        .filter(F.col("pos") <= 3)
-        .select("ck", F.col("cpk").alias("pk"), "pos")
-    )
+    """NDCG@3 of the item-item recommender under the temporal holdout
+    `_recsys_holdout` — rank-aware evaluation (a hit at position 1 is
+    worth 2× one at position 3), the second standard recsys metric. The
+    per-user top 3 is `_recsys_ranked` (summed integer-scaled cosine over
+    the basket's neighbor lists, train-basket items excluded). IDCG is
+    the closed form over min(3, n_rel) ideal positions. Same
+    capped-basket bounded shapes as the model; the eval adds
+    co-partitioned (ck, pk) joins only."""
+    base, b = _recsys_holdout(spark, sf_dir)
+    top3 = _recsys_ranked(b, sf_dir, 3)
     test = base.filter(~F.col("_train")).select("ck", "pk").distinct()
     nrel = test.groupBy("ck").agg(F.count(F.lit(1)).cast("long").alias("n_rel"))
     eval_u = test.select("ck").distinct().join(
@@ -12598,51 +12620,12 @@ def k_core_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the emitted convergence trace. Exact k-core iterates to a fixed
     point — 3 rounds is a documented truncation (the oracle unrolls the
     SAME 3 rounds, so the check is exact); the full loop is the
-    pagerank-style driver loop with a scalar convergence collect. Edge
-    generation is in-row from per-order basket arrays (bounded per order,
-    the triangle-count discipline); each round's edge frame is
+    pagerank-style driver loop with a scalar convergence collect. The
+    edge list is `_copurchase_pairs`; each round's edge frame is
     localCheckpoint'ed so the next round plans over a LogicalRDD — the
     lineage-truncation requirement explained at the loop below."""
-    pt = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 25).select("p_partkey")
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(pt), F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-    )
-    # collect_set dedups (ok, pk) itself — the old pre-basket .distinct()
-    # paid one extra exchange plus a single-task partial aggregation (the
-    # scan is one task on single-row-group parquet). The post-agg basket
-    # frame AQE-coalesces to ~1 partition, so the C(|basket|,2) in-row
-    # pair explosion ran single-threaded: spread it across the session's
-    # parallelism first (scale-adaptive; no-op cost on a ~|orders|-row
-    # frame).
-    baskets = li.groupBy("ok").agg(F.array_sort(F.collect_set("pk")).alias("ps"))
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        )
 
     # DRIVER-LOOP form with LINEAGE TRUNCATION: each round's edge frame is
     # localCheckpoint'ed, so round r+1 plans over a LogicalRDD —
@@ -12676,7 +12659,7 @@ def k_core_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = pairs.repartition(p, "u").localCheckpoint(eager=False)
     trace_rows: list[DataFrame] = []
     for rnd in range(4):
-        deg = degrees(e).localCheckpoint(eager=False)
+        deg = _degrees(e).localCheckpoint(eager=False)
         trace_rows.append(
             deg.agg(
                 F.lit(rnd).cast("long").alias("round"),
@@ -12761,46 +12744,8 @@ def k_core_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap turns a runaway into a loud error, and the unrolled oracle's
     final-pair check makes silent truncation impossible."""
     k = 40
-    pt = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 25).select("p_partkey")
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(pt), F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-    )
-    # collect_set dedups (ok, pk) itself — the old pre-basket .distinct()
-    # paid one extra exchange plus a single-task partial aggregation (the
-    # scan is one task on single-row-group parquet). The post-agg basket
-    # frame AQE-coalesces to ~1 partition, so the C(|basket|,2) in-row
-    # pair explosion ran single-threaded: spread it across the session's
-    # parallelism first (scale-adaptive; no-op cost on a ~|orders|-row
-    # frame).
-    baskets = li.groupBy("ok").agg(F.array_sort(F.collect_set("pk")).alias("ps"))
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        )
 
     # r11 folded both trace scalars into ONE aggregation (n_nodes =
     # count(*), n_edges = sum(d)/2 — exact: each u<v edge contributes 2 to
@@ -12820,7 +12765,7 @@ def k_core_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (int(row["nn"] or 0), int(row["sd"] or 0) // 2)
 
     e = pairs.repartition(p, "u").localCheckpoint(eager=False)
-    deg = degrees(e).localCheckpoint(eager=False)
+    deg = _degrees(e).localCheckpoint(eager=False)
     prev = stats(deg)
     rnd = 0
     while rnd < 30:
@@ -12831,7 +12776,7 @@ def k_core_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
             .localCheckpoint(eager=False)
         )
-        deg2 = degrees(e2).localCheckpoint(eager=False)
+        deg2 = _degrees(e2).localCheckpoint(eager=False)
         cur = stats(deg2)
         if cur == prev:
             break
@@ -12915,47 +12860,20 @@ def graph_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFram
     """Degree assortativity of the part co-purchase graph: the Pearson
     correlation of endpoint degrees over the SYMMETRIZED edge list
     (Newman's r — negative means hubs attach to leaves, the usual retail
-    shape). Same in-row basket pair generation as the k-core/triangle
-    family (never node×edge); degrees are one keyed agg; the corr is a
-    single co-moment pass over edges joined to the (small) degree frame
-    twice. corr partial-merge parity with DuckDB is pinned by
-    corr_lineitem_metrics."""
-    pt = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 25).select("p_partkey")
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(pt), F.col("l_partkey") == F.col("p_partkey"))
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    baskets = li.groupBy("ok").agg(F.array_sort(F.collect_set("pk")).alias("ps"))
+    shape). The edge list is `_copurchase_pairs` (the k-core/triangle
+    family's, never node×edge); degrees are one keyed agg (`_degrees`);
+    the corr is a single co-moment pass over edges joined to the (small)
+    degree frame twice. corr partial-merge parity with DuckDB is pinned
+    by corr_lineitem_metrics."""
     edges = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
+        _copurchase_pairs(spark, sf_dir)
         # repartition BEFORE persist (cached relations freeze partitioning):
         # a bare session would otherwise run the whole chain at 200 tiny
         # shuffle partitions — measured 30 s vs 8 s at sf0.01
         .repartition(spark.sparkContext.defaultParallelism, "u")
         .persist()
     )
-    deg = (
-        edges.select(F.col("u").alias("n"))
-        .unionAll(edges.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    deg = _degrees(edges)
     sym = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     j = (
         sym.join(deg.withColumnRenamed("n", "u").withColumnRenamed("d", "dd_u"), "u")
@@ -13758,8 +13676,8 @@ def levene_bf_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (classic ANOVA assumes homoscedasticity; BF is its robust gatekeeper).
     Absolute deviations from the EXACT per-segment median (percentile ≡
     quantile_cont bit-exact) feed the same one-moment-pass F recipe as
-    the ANOVA query: per-segment (n, mean, var) of z, grand algebra on
-    the 5-row frame. Two fact passes (median, then deviations), both
+    the ANOVA query: per-segment (n, mean, var) of z, `_one_way_anova`
+    on the 5-row frame. Two fact passes (median, then deviations), both
     keyed aggs."""
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -13775,22 +13693,7 @@ def levene_bf_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("z").alias("m"),
         F.var_samp("z").alias("v"),
     )
-    t = g.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n").cast("long").alias("n_total"),
-        (F.sum(F.col("n") * F.col("m")) / F.sum("n")).alias("gm"),
-        F.sum(F.col("v") * (F.col("n") - 1)).alias("ssw"),
-    )
-    b = (
-        g.crossJoin(F.broadcast(t))
-        .groupBy("k", "n_total")
-        .agg(
-            F.sum(
-                F.col("n") * (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))
-            ).alias("ssb"),
-            F.max("ssw").alias("ssw"),
-        )
-    )
+    b = _one_way_anova(g)
     return b.select(
         "k",
         "n_total",
@@ -14201,16 +14104,7 @@ def durbin_watson_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two keyed exchanges: the (type, day) bucket agg, then one per-type
     partitioning shared by the lag/total windows and the final agg over
     the days-sized frame."""
-    ev = _t(spark, sf_dir, "events")
-    from windflow_spark.operators.timeutil import event_micros
-
-    c = (
-        ev.withColumn(
-            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
-        )
-        .groupBy("event_type", "bidx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     wt = W.partitionBy("event_type")
     w = c.select(
         "event_type",
@@ -14339,16 +14233,7 @@ def ts_bollinger_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first 6 days per key are dropped (full windows only). Two keyed
     exchanges: the (type, day) bucket agg, then the per-type rolling
     window over the days-sized summary frame."""
-    ev = _t(spark, sf_dir, "events")
-    from windflow_spark.operators.timeutil import event_micros
-
-    c = (
-        ev.withColumn(
-            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
-        )
-        .groupBy("event_type", "bidx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     win = (
         W.partitionBy("event_type").orderBy("bidx").rowsBetween(-6, W.currentRow)
     )
@@ -14968,16 +14853,7 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer tie term Σt(t−1)(2t+5); only the final z = (S∓1)/√var runs
     in doubles, and the trend label compares the UNROUNDED z on both
     engines."""
-    ev = _t(spark, sf_dir, "events")
-    from windflow_spark.operators.timeutil import event_micros
-
-    c = (
-        ev.withColumn(
-            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
-        )
-        .groupBy("event_type", "bidx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     a = c.select("event_type", F.col("bidx").alias("ai"), F.col("cnt").alias("ac"))
     b = c.select(
         F.col("event_type").alias("bt"),
@@ -15423,16 +15299,7 @@ def sax_symbols_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no division, no rounding anywhere near a boundary). The SAX string
     aggregates in explicit bidx order on both engines. One keyed
     exchange for the day agg; the per-type moments ride a broadcast."""
-    ev = _t(spark, sf_dir, "events")
-    from windflow_spark.operators.timeutil import event_micros
-
-    c = (
-        ev.withColumn(
-            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
-        )
-        .groupBy("event_type", "bidx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     st = c.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cnt").cast("long").alias("s"),
@@ -15666,16 +15533,7 @@ def hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     H is computed from the ALREADY-ROUNDED averages so both engines feed
     log2 identical inputs. Constant blocks (S=0) are excluded
     identically. One (type,day) exchange + windows on day-frames."""
-    ev = _t(spark, sf_dir, "events")
-    from windflow_spark.operators.timeutil import event_micros
-
-    c = (
-        ev.withColumn(
-            "bidx", F.floor(event_micros(ev, "ts") / F.lit(US_DAY)).cast("long")
-        )
-        .groupBy("event_type", "bidx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    c = _daily_event_counts(spark, sf_dir)
     wt = W.partitionBy("event_type")
     r = c.select(
         "event_type",
@@ -18881,70 +18739,18 @@ def clustering_coefficient_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def recsys_mrr_at5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MRR@5 of the item-item recommender under the temporal holdout of
-    `recsys_hitrate_at3`/`recsys_ndcg_at3` — mean reciprocal rank of the
-    FIRST relevant recommendation, the metric that rewards putting one
-    right answer on top (navigation/search framing) where NDCG rewards
-    the whole list. Same capped-basket model (cap 10, top-3 neighbors,
-    integer-scaled cosine ranking keys so near-ties cannot flip across
-    engines); per user the reciprocal rank is an exact small rational
-    (1/1..1/5 or 0), so the averaged MRR is deterministic to well below
-    the 6dp rounding. Joins are all (ck, pk)-keyed — no new shuffle
+    """MRR@5 of the item-item recommender under the temporal holdout
+    `_recsys_holdout` — mean reciprocal rank of the FIRST relevant
+    recommendation, the metric that rewards putting one right answer on
+    top (navigation/search framing) where NDCG rewards the whole list.
+    The per-user top 5 is `_recsys_ranked` (cap-10 baskets, top-3
+    neighbors, integer-scaled cosine ranking keys so near-ties cannot
+    flip across engines); per user the reciprocal rank is an exact small
+    rational (1/1..1/5 or 0), so the averaged MRR is deterministic to
+    well below the 6dp rounding. Joins are all (ck, pk)-keyed — no new shuffle
     shapes beyond the audited recsys family."""
-    from windflow_spark.operators.recsys import cap_recent, itemitem_topk
-    from windflow_spark.operators.timeutil import event_micros
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    ou = o.withColumn("_ou", event_micros(o, "o_orderdate"))
-    # r12 (guide §5): midpoint cut stays IN-PLAN as a broadcast one-row
-    # aggregate instead of a driver collect — one fewer eager job
-    cutf = ou.agg(F.expr("(min(_ou) + max(_ou)) div 2").alias("_cut"))
-    ob = ou.crossJoin(F.broadcast(cutf))
-    # r12 (guide §2.4, measured): ONE lineitem⋈orders join + ONE hash(ck)
-    # exchange serves BOTH holdout halves (train cap and test distinct
-    # cluster by supersets of ck — no exchange over the persisted base);
-    # the old shape scanned and joined lineitem once per half.
-    base = (
-        li.join(ob, li.l_orderkey == ob.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_partkey").alias("pk"),
-            F.col("o_orderdate").alias("od"),
-            (F.col("_ou") <= F.col("_cut")).alias("_train"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "ck")
-        .persist()
-    )
-    b = cap_recent(base.filter(F.col("_train")), basket_cap=10).persist()
-    model = itemitem_topk(
-        b, min_cooc=2, topk=3, item_est_bytes=_catalog_est(sf_dir, 1, 16)
-    ).select(
-        "item_a", "item_b", "cosine_sim"
-    )
-    cand = (
-        b.join(
-            maybe_broadcast(model, _catalog_est(sf_dir, 3, 32)),
-            b.pk == model.item_a,
-        )
-        .join(
-            b.select(F.col("ck").alias("ck2"), F.col("pk").alias("pk2")),
-            (F.col("ck") == F.col("ck2")) & (F.col("item_b") == F.col("pk2")),
-            "left_anti",
-        )
-        .groupBy("ck", F.col("item_b").alias("cpk"))
-        .agg(
-            F.sum(F.round(F.col("cosine_sim") * 1_000_000).cast("long"))
-            .cast("long")
-            .alias("score")
-        )
-    )
-    wtop = W.partitionBy("ck").orderBy(F.col("score").desc(), F.col("cpk"))
-    top5 = (
-        cand.withColumn("pos", F.row_number().over(wtop))
-        .filter(F.col("pos") <= 5)
-        .select("ck", F.col("cpk").alias("pk"), "pos")
-    )
+    base, b = _recsys_holdout(spark, sf_dir)
+    top5 = _recsys_ranked(b, sf_dir, 5)
     test = base.filter(~F.col("_train")).select("ck", "pk").distinct()
     eval_u = test.select("ck").distinct().join(
         b.select("ck").distinct(), "ck", "left_semi"
@@ -19044,62 +18850,11 @@ def recsys_map_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
     small rationals (hits≤k / k with k ≤ 3); the hits-upto-k counts come
     from a per-user self-join over ≤3 hit positions (bounded in-row-scale
     work), so the averaged MAP is deterministic far below the 6dp round.
-    Model and holdout are byte-identical to the sibling queries — one
-    model audit covers all four metrics."""
-    from windflow_spark.operators.recsys import cap_recent, itemitem_topk
-    from windflow_spark.operators.timeutil import event_micros
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    ou = o.withColumn("_ou", event_micros(o, "o_orderdate"))
-    # r12 (guide §5): midpoint cut stays IN-PLAN as a broadcast one-row
-    # aggregate instead of a driver collect — one fewer eager job
-    cutf = ou.agg(F.expr("(min(_ou) + max(_ou)) div 2").alias("_cut"))
-    ob = ou.crossJoin(F.broadcast(cutf))
-    # r12 (guide §2.4, measured): ONE lineitem⋈orders join + ONE hash(ck)
-    # exchange serves BOTH holdout halves (train cap and test distinct
-    # cluster by supersets of ck — no exchange over the persisted base);
-    # the old shape scanned and joined lineitem once per half.
-    base = (
-        li.join(ob, li.l_orderkey == ob.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_partkey").alias("pk"),
-            F.col("o_orderdate").alias("od"),
-            (F.col("_ou") <= F.col("_cut")).alias("_train"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "ck")
-        .persist()
-    )
-    b = cap_recent(base.filter(F.col("_train")), basket_cap=10).persist()
-    model = itemitem_topk(
-        b, min_cooc=2, topk=3, item_est_bytes=_catalog_est(sf_dir, 1, 16)
-    ).select(
-        "item_a", "item_b", "cosine_sim"
-    )
-    cand = (
-        b.join(
-            maybe_broadcast(model, _catalog_est(sf_dir, 3, 32)),
-            b.pk == model.item_a,
-        )
-        .join(
-            b.select(F.col("ck").alias("ck2"), F.col("pk").alias("pk2")),
-            (F.col("ck") == F.col("ck2")) & (F.col("item_b") == F.col("pk2")),
-            "left_anti",
-        )
-        .groupBy("ck", F.col("item_b").alias("cpk"))
-        .agg(
-            F.sum(F.round(F.col("cosine_sim") * 1_000_000).cast("long"))
-            .cast("long")
-            .alias("score")
-        )
-    )
-    wtop = W.partitionBy("ck").orderBy(F.col("score").desc(), F.col("cpk"))
-    top3 = (
-        cand.withColumn("pos", F.row_number().over(wtop))
-        .filter(F.col("pos") <= 3)
-        .select("ck", F.col("cpk").alias("pk"), "pos")
-    )
+    Holdout and ranking are the shared `_recsys_holdout` and
+    `_recsys_ranked` helpers — one model audit covers all four
+    metrics."""
+    base, b = _recsys_holdout(spark, sf_dir)
+    top3 = _recsys_ranked(b, sf_dir, 3)
     test = base.filter(~F.col("_train")).select("ck", "pk").distinct()
     nrel = test.groupBy("ck").agg(F.count(F.lit(1)).cast("long").alias("n_rel"))
     eval_u = test.select("ck").distinct().join(
@@ -19128,6 +18883,29 @@ def recsys_map_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("ap") > 0, 1)).cast("long").alias("n_hit_users"),
         F.round(F.avg("ap"), 6).alias("map3"),
     )
+
+
+def _quantized_embeddings(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Quantized embedding prelude shared by `embedding_covariance_topk`
+    and `embedding_pca_power_iteration`. Returns ``(q, s)``: ``q`` = one
+    row per vector holding its embedding quantized to 1e-6-grid BIGINTs
+    (identical float32→double→round path on both engines), ``s`` = per
+    dimension (dim, si = Σq, n) — exact BIGINT sums."""
+    emb = _t_wide(spark, sf_dir, "embeddings")
+    q = emb.select(
+        F.transform(
+            "embedding",
+            lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
+        ).alias("q")
+    )
+    d = q.select(F.posexplode("q").alias("dim", "qv"))
+    s = d.groupBy("dim").agg(
+        F.sum("qv").cast("long").alias("si"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )
+    return q, s
 
 
 @register(
@@ -19169,26 +18947,15 @@ def embedding_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     products from the quantized array — no d-way self-join of an exploded
     (row, dim) table, which at 100 TB would shuffle n·d rows into an n·d²
     join); the aggregate is one groupBy over dim pairs, dim-count-sized.
-    Exactness: values are quantized to 1e-6-grid INTEGERS first (identical
-    float32→double→round path on both engines — no decimal .5 boundary is
-    reachable from a binary float), so Σq and Σq·q are exact BIGINT sums
+    Exactness: values are quantized to 1e-6-grid INTEGERS first
+    (`_quantized_embeddings`: identical float32→double→round path on both
+    engines — no decimal .5 boundary is reachable from a binary float), so Σq and Σq·q are exact BIGINT sums
     and the covariance is a fixed-order double expression over exact ints
     — bit-identical across engines and partition orders. At sf1 the
     largest Σq·q term is ~5e18, inside BIGINT; beyond that switch the
     pair accumulator to DECIMAL(38,0) (documented headroom bound).
     Ranking: |cov| after 6dp rounding, (di, dj) tie-break, TakeOrdered."""
-    emb = _t_wide(spark, sf_dir, "embeddings")
-    q = emb.select(
-        F.transform(
-            "embedding",
-            lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-        ).alias("q")
-    )
-    d = q.select(F.posexplode("q").alias("dim", "qv"))
-    s = d.groupBy("dim").agg(
-        F.sum("qv").cast("long").alias("si"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
+    q, s = _quantized_embeddings(spark, sf_dir)
     pairs = q.select(
         F.explode(
             F.flatten(
@@ -21502,18 +21269,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     joins. At 100 TB only the ONE moments scan touches the corpus —
     iteration cost is independent of n. Sign/ties are exact-integer
     deterministic; top-8 |loading| with dim tie-break."""
-    emb = _t_wide(spark, sf_dir, "embeddings")
-    q = emb.select(
-        F.transform(
-            "embedding",
-            lambda v: F.round(v.cast("double") * 1_000_000).cast("long"),
-        ).alias("q")
-    )
-    d = q.select(F.posexplode("q").alias("dim", "qv"))
-    s = d.groupBy("dim").agg(
-        F.sum("qv").cast("long").alias("si"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
+    q, s = _quantized_embeddings(spark, sf_dir)
     pairs = q.select(
         F.explode(
             F.flatten(
